@@ -7,30 +7,38 @@ Layers:
     alertOnBothOnly (F3), cause accumulation in reference order (F6). Pure
     column algebra + a broadcast join against the override dimension; fully
     oracle-checkable.
-  * `alert_debounce` — F4: per (server, service, lag) rolling bad-interval
-    counter (+1 on firing interval while counter <= window, -1 floored at 0
-    on quiet ones; trigger at counter >= required). The counter is a
-    clamped recursion (output feeds state), so it runs as an ordered per-key
-    applyInPandas; rows-only driver check + trace unit tests.
-  * `alert_cooldown` — F5: per-service last-alert registry; suppress alerts
-    within the cooldown. The reference measures cooldown in processing time
-    (stream_process_alerts.js:437 `new Date()`); here it is defined in EVENT
-    time (entry timestamp) with deterministic (timestamp, server, lag)
-    ordering so results are reproducible and batch/stream identical.
+  * `alert_service_scan` — F4 then F5 over one service's intervals, the
+    kernel shared by the batch `alert_pipeline` and the streaming
+    `alerts_stateful`. F4: per (server, lag) rolling bad-interval counter
+    (+1 on firing interval while counter <= window, -1 floored at 0 on
+    quiet ones; trigger at counter >= required) — a clamped recursion
+    (output feeds state), so it runs ordered in Python; trace unit tests
+    pin `debounce_trace_py`. F5: per-service last-alert registry; suppress
+    alerts within the cooldown. The reference measures cooldown in
+    processing time (stream_process_alerts.js:437 `new Date()`); here it is
+    defined in EVENT time (entry timestamp) with deterministic (timestamp,
+    server, lag) ordering so results are reproducible and batch/stream
+    identical.
+  * `alert_pipeline` — F1-F6 end to end: `_with_cause` over the full
+    interval series, then one applyInPandas grouped by service running
+    `alert_service_scan` from empty state.
 
 Scale: candidates is one narrow projection (no shuffle beyond the broadcast);
-debounce shuffles once on (server, service, lag); cooldown's per-service
-groups are alert-sparse by construction. No driver-side state anywhere.
+the pipeline shuffles once, on service, into one Python task per task slot
+(`session.task_slots`). No driver-side state anywhere.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from apmbackend_spark.session import task_slots
 
 CAUSE_HARD_AVG = "average exceeded hard ms threshold"
 CAUSE_HARD_P75 = "per75 exceeded hard ms threshold"
@@ -317,43 +325,6 @@ def debounce_trace_py(
     return out
 
 
-def alert_debounce(
-    candidates_and_quiet: DataFrame, cfg: AlertConfig
-) -> DataFrame:
-    """Apply F4 over the full fs interval series. Input needs columns
-    (timestamp, server, service, lag, cause) where cause='' marks quiet
-    intervals; emits only triggering rows."""
-    ws, req = int(cfg.window_size), int(cfg.required_bad)
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("timestamp")
-        flags = [bool(c) for c in (pdf["cause"] != "").tolist()]
-        trace = debounce_trace_py(flags, ws, req)
-        pdf = pdf.assign(badcount=[c for c, _ in trace])
-        return pdf[[t for _, t in trace]]
-
-    schema = (
-        "timestamp long, server string, service string, lag int, tpm double, "
-        "average double, per75 double, per95 double, cause string, badcount int"
-    )
-    cols = [c for c in candidates_and_quiet.columns]
-    needed = ["timestamp", "server", "service", "lag", "tpm", "average", "per75", "per95", "cause"]
-    missing = [c for c in needed if c not in cols]
-    if missing:
-        raise ValueError(f"debounce input missing columns {missing}")
-    # pinned-count repartition: the groups are bytes-small but the frames
-    # are wide, and AQE's byte-based coalescing otherwise collapses the
-    # grouping exchange to one partition, serializing every key through a
-    # single Python worker (same fix as zscore_recursive)
-    inp = candidates_and_quiet.select(*needed)
-    n_parts = max(inp.sparkSession.sparkContext.defaultParallelism, 32)
-    return (
-        inp.repartition(n_parts, "server", "service", "lag")
-        .groupBy("server", "service", "lag")
-        .applyInPandas(fn, schema=schema)
-    )
-
-
 def cooldown_trace_py(
     ts_list: list[int], cooldown_ms: float, last: int | None = None
 ) -> list[bool]:
@@ -370,44 +341,70 @@ def cooldown_trace_py(
     return out
 
 
-def alert_cooldown(triggered: DataFrame, cfg: AlertConfig) -> DataFrame:
-    """Event-time deterministic per-service cooldown dedup; ties broken by
-    (timestamp, server, lag)."""
-    cooldown_ms = cfg.cooldown_minutes * 60_000.0
-    schema = (
-        "alerttimestamp long, entrytimestamp long, server string, service string, "
-        "lag int, cause string"
-    )
+ALERT_INPUT_COLS = ("timestamp", "server", "service", "lag", "cause")
+ALERT_SCHEMA = (
+    "alerttimestamp long, entrytimestamp long, server string, "
+    "service string, lag int, cause string"
+)
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["timestamp", "server", "lag"])
-        keep = cooldown_trace_py(pdf["timestamp"].tolist(), cooldown_ms)
-        kept = pdf[keep]
-        return pd.DataFrame(
-            {
-                "alerttimestamp": kept["timestamp"],
-                "entrytimestamp": kept["timestamp"],
-                "server": kept["server"],
-                "service": kept["service"],
-                "lag": kept["lag"],
-                "cause": kept["cause"],
-            }
-        )
 
-    # alert volume is tiny by here; the pinned repartition only keeps the
-    # handful of service groups off a single AQE-coalesced worker
-    inp = triggered.select("timestamp", "server", "service", "lag", "cause")
-    n_parts = max(inp.sparkSession.sparkContext.defaultParallelism, 32)
-    return (
-        inp.repartition(n_parts, "service")
-        .groupBy("service")
-        .applyInPandas(fn, schema=schema)
+def alert_service_scan(
+    rows: pd.DataFrame,
+    cfg: AlertConfig,
+    counters: dict[tuple[str, int], int],
+    last_ts: int | None,
+) -> tuple[pd.DataFrame, int | None]:
+    """F4 then F5 over one service's intervals: the kernel of both
+    ``alert_pipeline`` and the streaming ``alerts_stateful``.
+
+    ``rows`` has ALERT_INPUT_COLS, quiet intervals marked cause=''. Each
+    (server, lag) series runs its debounce counter in timestamp order from
+    ``counters[(server, lag)]`` (0 when absent); the triggered rows then
+    pass the cooldown in (timestamp, server, lag) order from ``last_ts``,
+    the last kept alert (None: none yet). ``counters`` is updated in place;
+    returns the kept alerts (ALERT_SCHEMA columns) and the new last_ts."""
+    ws, req = int(cfg.window_size), int(cfg.required_bad)
+    # cooldown order up front: every (server, lag) series is then in
+    # timestamp order, and so is the triggered subset
+    rows = rows.sort_values(["timestamp", "server", "lag"])
+    fired = (rows["cause"] != "").to_numpy()
+    triggered = np.zeros(len(rows), dtype=bool)
+    for (srv, lg), idx in rows.groupby(["server", "lag"], dropna=False).indices.items():
+        key = (srv, int(lg))
+        trace = debounce_trace_py(fired[idx].tolist(), ws, req, start=counters.get(key, 0))
+        counters[key] = trace[-1][0]
+        triggered[idx] = [t for _, t in trace]
+    trig = rows[triggered]
+    keep = cooldown_trace_py(
+        trig["timestamp"].tolist(), cfg.cooldown_minutes * 60_000.0, last=last_ts
     )
+    kept = trig[np.array(keep, dtype=bool)]
+    if len(kept):
+        last_ts = int(kept["timestamp"].iloc[-1])
+    alerts = pd.DataFrame(
+        {
+            "alerttimestamp": kept["timestamp"],
+            "entrytimestamp": kept["timestamp"],
+            "server": kept["server"],
+            "service": kept["service"],
+            "lag": kept["lag"],
+            "cause": kept["cause"],
+        }
+    )
+    return alerts, last_ts
 
 
 def alert_pipeline(fs: DataFrame, cfg: AlertConfig) -> DataFrame:
     """F1-F6 end to end: causes over the full interval series (quiet
-    intervals marked cause='') -> debounce -> cooldown."""
-    return alert_cooldown(
-        alert_debounce(_with_cause(fs, cfg, keep_quiet=True), cfg), cfg
+    intervals marked cause=''), then one grouped map per service running
+    ``alert_service_scan`` from empty state."""
+
+    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
+        return alert_service_scan(pdf, cfg, {}, None)[0]
+
+    flagged = _with_cause(fs, cfg, keep_quiet=True).select(*ALERT_INPUT_COLS)
+    return (
+        flagged.repartition(task_slots(fs.sparkSession), "service")
+        .groupBy("service")
+        .applyInPandas(fn, schema=ALERT_SCHEMA)
     )

@@ -47,6 +47,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from apmbackend_spark.session import task_slots
+
 METRICS = ("average", "per75", "per95")
 DEFAULT_LAGS = (360, 8640)  # reference config/apm_config.json:137,142
 
@@ -826,17 +828,8 @@ def zscore_recursive(
     # Grouped by (server, service) ONLY — a lag fan-out before the shuffle
     # was tried and is a net loss: it multiplies the Arrow transfer volume
     # by len(lags) while the per-group Python scan total stays the same.
-    #
-    # The explicit pinned-count repartition matters: the groups are BYTES-
-    # small but COMPUTE-heavy, so AQE's byte-based partition coalescing
-    # collapses the grouping exchange to ONE partition and serializes every
-    # key through a single Python worker (measured 8.6 s -> 1.4 s at sf0.1
-    # for the same work). A user repartition with an explicit count is
-    # exempt from AQE coalescing, and because it hash-partitions on exactly
-    # the grouping keys, applyInPandas adds no further exchange on top.
-    n_parts = max(st.sparkSession.sparkContext.defaultParallelism, 32)
     return (
-        st.repartition(n_parts, "server", "service")
+        st.repartition(task_slots(st.sparkSession), "server", "service")
         .groupBy("server", "service")
         .applyInPandas(fn, schema=schema)
     )

@@ -49,6 +49,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from apmbackend_spark.session import task_slots
 from apmbackend_spark.sources.logparse import (
     PARSED_SCHEMA,
     RX_AUTR_LINK,
@@ -341,12 +342,9 @@ def parse_logs_chunked(
             [{c: r.get(c) for c in cols} for r in rows], columns=cols
         )
 
-    # pinned repartition: chunk groups are bytes-tiny but parse-heavy, so
-    # AQE byte-coalescing would serialize the per-chunk scans (the
-    # zscore_recursive AQE lesson)
-    n_parts = max(cdf.sparkSession.sparkContext.defaultParallelism, 32)
+    # chunk groups are bytes-tiny but parse-heavy (see task_slots)
     scanned = (
-        cdf.repartition(n_parts, "path", "off")
+        cdf.repartition(task_slots(cdf.sparkSession), "path", "off")
         .groupBy("path", "off")
         .applyInPandas(scan, schema="path string, " + _CHUNK_SCHEMA)
         .persist()

@@ -36,6 +36,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from apmbackend_spark.session import task_slots
+
 # precompiled patterns (reference hoists these too, :345,733-739)
 RX_LOGID = re.compile(r"^\[([^\]]*)\]\s+")
 RX_LOGTS = re.compile(r"(\d{4}-\d{2}-\d{2}) (\d{2}:\d{2}:\d{2}),(\d{3})")
@@ -321,13 +323,9 @@ def parse_logs(
         ]
         return pd.DataFrame([{c: r.get(c) for c in cols} for r in rows], columns=cols)
 
-    # pinned-count repartition on the grouping key: parse cost tracks line
-    # count, not file bytes, so AQE's byte-based coalescing would otherwise
-    # collapse small-but-parse-heavy file groups onto one Python worker
-    # (the zscore_recursive AQE lesson)
-    n_parts = max(raw.sparkSession.sparkContext.defaultParallelism, 32)
+    # parse cost tracks line count, not file bytes (see task_slots)
     return (
-        raw.repartition(n_parts, "path")
+        raw.repartition(task_slots(raw.sparkSession), "path")
         .groupBy("path")
         .applyInPandas(fn, schema=PARSED_SCHEMA)
     )

@@ -19,7 +19,6 @@ from __future__ import annotations
 from collections.abc import Iterable, Iterator
 from typing import Any
 
-import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
@@ -279,130 +278,26 @@ def bucket_zerofill_stateful(
 # F4/F5 streaming: alert debounce + cooldown with store-backed state.
 # ---------------------------------------------------------------------------
 
-_DEBOUNCE_OUT = (
-    "timestamp long, server string, service string, lag int, tpm double, "
-    "average double, per75 double, per95 double, cause string, badcount int"
-)
-_DEBOUNCE_COLS = [
-    "timestamp", "server", "service", "lag", "tpm",
-    "average", "per75", "per95", "cause", "badcount",
-]
-
-
-def alert_debounce_stateful(flagged_stream: DataFrame, cfg) -> DataFrame:
-    """F4 as a stateful streaming stage: per (server, service, lag) the
-    rolling bad-interval counter lives in the state store, so the trace
-    continues EXACTLY across micro-batches (same ``debounce_trace_py`` as
-    the batch operator, seeded with the stored counter). Input needs the
-    full interval series with quiet rows marked cause='' (the counter must
-    see them to decay)."""
-    from apmbackend_spark.operators.alerts import debounce_trace_py
-
-    ws, req = int(cfg.window_size), int(cfg.required_bad)
-    state_schema = StructType([StructField("counter", IntegerType(), True)])
-
-    def fn(
-        key: tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        c0 = state.get[0] if state.exists else 0
-        rows = pd.concat(list(pdfs)).sort_values("timestamp")
-        flags = [bool(x) for x in (rows["cause"] != "").tolist()]
-        trace = debounce_trace_py(flags, ws, req, start=c0)
-        state.update((int(trace[-1][0]) if trace else int(c0),))
-        rows = rows.assign(badcount=[c for c, _ in trace])
-        yield rows[np.array([t for _, t in trace], dtype=bool)][_DEBOUNCE_COLS]
-
-    return (
-        flagged_stream.select(*_DEBOUNCE_COLS[:-1])
-        .groupBy("server", "service", "lag")
-        .applyInPandasWithState(
-            fn,
-            outputStructType=_DEBOUNCE_OUT,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
-def alert_cooldown_stateful(triggered_stream: DataFrame, cfg) -> DataFrame:
-    """F5 as a stateful streaming stage: per service, the last-kept alert
-    timestamp persists in the state store; within a batch ties break by
-    (timestamp, server, lag) exactly like the batch operator."""
-    from apmbackend_spark.operators.alerts import cooldown_trace_py
-
-    cooldown_ms = float(cfg.cooldown_minutes) * 60_000.0
-    out_schema = (
-        "alerttimestamp long, entrytimestamp long, server string, "
-        "service string, lag int, cause string"
-    )
-    state_schema = StructType([StructField("last_ts", LongType(), True)])
-
-    def fn(
-        key: tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        last0 = state.get[0] if state.exists else None
-        rows = pd.concat(list(pdfs)).sort_values(["timestamp", "server", "lag"])
-        ts = rows["timestamp"].tolist()
-        keep = cooldown_trace_py(ts, cooldown_ms, last=last0)
-        kept_ts = [t for t, k in zip(ts, keep) if k]
-        state.update((int(kept_ts[-1]) if kept_ts else (None if last0 is None else int(last0)),))
-        kept = rows[np.array(keep, dtype=bool)]
-        yield pd.DataFrame(
-            {
-                "alerttimestamp": kept["timestamp"],
-                "entrytimestamp": kept["timestamp"],
-                "server": kept["server"],
-                "service": kept["service"],
-                "lag": kept["lag"],
-                "cause": kept["cause"],
-            }
-        )
-
-    return (
-        triggered_stream.select("timestamp", "server", "service", "lag", "cause")
-        .groupBy("service")
-        .applyInPandasWithState(
-            fn,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
 
 def alerts_stateful(fs_stream: DataFrame, cfg) -> DataFrame:
     """F1-F6 end to end on a stream. Spark allows one
-    ``applyInPandasWithState`` per streaming query, so the two recursive
-    stages fuse into a single operator keyed by service — the cooldown's
+    ``applyInPandasWithState`` per streaming query, so debounce and
+    cooldown run as a single operator keyed by service — the cooldown's
     natural key (the reference's last-alert registry is per-service,
-    stream_process_alerts.js:436-467). Inside a group, each (server, lag)
-    sub-series runs its debounce counter from stored state, then the
-    cooldown scans the triggered rows in (timestamp, server, lag) order —
-    identical ordering to the batch ``alert_pipeline``. State = parallel
-    arrays of (server, lag) -> counter plus the last-kept timestamp;
-    parallelism is #services, which is exactly the contention the
-    reference's per-service registry imposes.
-
-    Batch twin: ``operators.alerts.alert_pipeline``."""
+    stream_process_alerts.js:436-467). Each group runs
+    ``operators.alerts.alert_service_scan``, the batch ``alert_pipeline``'s
+    kernel, from its stored state: parallel arrays of (server, lag) ->
+    counter plus the last-kept timestamp. Parallelism is #services, which
+    is exactly the contention the reference's per-service registry
+    imposes."""
     from apmbackend_spark.operators.alerts import (
+        ALERT_INPUT_COLS,
+        ALERT_SCHEMA,
         _with_cause,
-        cooldown_trace_py,
-        debounce_trace_py,
+        alert_service_scan,
     )
     from pyspark.sql.types import StringType
 
-    ws, req = int(cfg.window_size), int(cfg.required_bad)
-    cooldown_ms = float(cfg.cooldown_minutes) * 60_000.0
-    out_schema = (
-        "alerttimestamp long, entrytimestamp long, server string, "
-        "service string, lag int, cause string"
-    )
     state_schema = StructType(
         [
             StructField("servers", ArrayType(StringType(), True), True),
@@ -426,27 +321,7 @@ def alerts_stateful(fs_stream: DataFrame, cfg) -> DataFrame:
         else:
             ctr, last_ts = {}, None
 
-        rows = pd.concat(list(pdfs))
-        trig_frames = []
-        for (srv, lg), sub in rows.groupby(["server", "lag"], sort=False):
-            sub = sub.sort_values("timestamp")
-            flags = [bool(x) for x in (sub["cause"] != "").tolist()]
-            trace = debounce_trace_py(flags, ws, req, start=ctr.get((srv, int(lg)), 0))
-            if trace:
-                ctr[(srv, int(lg))] = int(trace[-1][0])
-            # np bool mask: a plain (possibly empty) list would be taken as
-            # a COLUMN selection by pandas
-            trig_frames.append(sub[np.array([t for _, t in trace], dtype=bool)])
-        trig = (
-            pd.concat(trig_frames).sort_values(["timestamp", "server", "lag"])
-            if trig_frames
-            else rows.iloc[0:0]
-        )
-        ts = trig["timestamp"].tolist()
-        keep = cooldown_trace_py(ts, cooldown_ms, last=last_ts)
-        kept_ts = [t for t, k in zip(ts, keep) if k]
-        if kept_ts:
-            last_ts = int(kept_ts[-1])
+        alerts, last_ts = alert_service_scan(pd.concat(list(pdfs)), cfg, ctr, last_ts)
         state.update(
             (
                 [s for s, _ in ctr],
@@ -455,25 +330,15 @@ def alerts_stateful(fs_stream: DataFrame, cfg) -> DataFrame:
                 None if last_ts is None else int(last_ts),
             )
         )
-        kept = trig[np.array(keep, dtype=bool)]
-        yield pd.DataFrame(
-            {
-                "alerttimestamp": kept["timestamp"],
-                "entrytimestamp": kept["timestamp"],
-                "server": kept["server"],
-                "service": kept["service"],
-                "lag": kept["lag"],
-                "cause": kept["cause"],
-            }
-        )
+        yield alerts
 
     flagged = _with_cause(fs_stream, cfg, keep_quiet=True)
     return (
-        flagged.select(*_DEBOUNCE_COLS[:-1])
+        flagged.select(*ALERT_INPUT_COLS)
         .groupBy("service")
         .applyInPandasWithState(
             fn,
-            outputStructType=out_schema,
+            outputStructType=ALERT_SCHEMA,
             stateStructType=state_schema,
             outputMode="append",
             timeoutConf=GroupStateTimeout.NoTimeout,

@@ -335,7 +335,7 @@ def stream_topology_gate(
         lo = load_tx(spark, sf_dir).agg(F.min("endts")).collect()[0][0]
         endts_before = int(lo) + int(slice_ms)
     # The gate's drained volume is span-bounded (|keys| x slice hours), so
-    # the session default of 32 shuffle partitions means mostly-empty state
+    # a 32-partition session default (local[32]) means mostly-empty state
     # store instances per stateful operator per micro-batch — measured ~2x
     # the gate's wall time in pure overhead at sf0.1. Size the stream's
     # shuffle to the bounded key volume for the drain, restore after.

@@ -55,6 +55,7 @@ def main() -> None:
     force(queries["window_stats"](spark, SF_DIR))
     force(next(iter(queries.values()))(spark, SF_DIR))
     spark.catalog.clearCache()
+    _drop_leaked_blocks(spark)
 
     timings: dict[str, float] = {}
     for name, fn in queries.items():
@@ -96,7 +97,7 @@ def _drop_leaked_blocks(spark) -> None:
         jmap = spark.sparkContext._jsc.getPersistentRDDs()
         it = jmap.entrySet().iterator()
         while it.hasNext():
-            it.next().getValue().unpersist(False)
+            it.next().getValue().unpersist(True)
     except Exception:
         pass
     # let the ContextCleaner reap dead broadcasts/accumulators too

@@ -24,20 +24,24 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def _n_jobs(spark) -> int:
-    """Total jobs submitted so far (REST API; localhost only)."""
+    """Total jobs submitted so far (REST API; localhost only): succeeded,
+    failed and still running. -1 when the REST API cannot be read."""
     base = spark.sparkContext.uiWebUrl
     app = spark.sparkContext.applicationId
+    url = (
+        f"{base}/api/v1/applications/{app}/jobs"
+        "?status=succeeded&status=failed&status=running"
+    )
     try:
-        with urllib.request.urlopen(
-            f"{base}/api/v1/applications/{app}/jobs?status=succeeded", timeout=10
-        ) as r:
-            done = len(json.load(r))
-        with urllib.request.urlopen(
-            f"{base}/api/v1/applications/{app}/jobs?status=failed", timeout=10
-        ) as r:
-            return done + len(json.load(r))
+        with urllib.request.urlopen(url, timeout=10) as r:
+            return len(json.load(r))
     except Exception:
         return -1
+
+
+def _delta(j0: int, j1: int) -> str:
+    """Jobs between two _n_jobs snapshots; '?' if either read failed."""
+    return "?" if -1 in (j0, j1) else str(j1 - j0)
 
 
 def main() -> None:
@@ -79,7 +83,7 @@ def main() -> None:
             j2 = _n_jobs(spark)
             print(
                 f"{name:32s} {t1 - t0:8.2f} {t2 - t1:8.2f} "
-                f"{j1 - j0:6d} {j2 - j1:6d}"
+                f"{_delta(j0, j1):>6s} {_delta(j1, j2):>6s}"
             )
             spark.catalog.clearCache()
 

@@ -93,3 +93,89 @@ def test_pipeline_end_to_end_counts(spark):
     assert got[0] == 120_000
     assert all(b - a > 60_000 for a, b in zip(got, got[1:]))
     assert all(a["cause"] == "average exceeded hard ms threshold" for a in alerts)
+
+
+def test_pipeline_and_stream_break_cooldown_ties_by_server_then_lag(spark, tmp_path):
+    """One service, 2 servers x 2 lags. At t=70 s (srvA, 360) and
+    (srvB, 60) trigger together: the server decides, srvA is kept. At
+    t=140 s (srvB, 60) and (srvB, 360) trigger together: the lag decides.
+    The batch pipeline, its DuckDB oracle and the stateful stream (three
+    micro-batches, so counters and the cooldown carry across batches) must
+    all return exactly those alerts."""
+    import duckdb
+    import pandas as pd
+
+    from pyspark.sql import functions as F
+
+    from apmbackend_spark.operators.alerts import (
+        alert_pipeline,
+        alert_pipeline_oracle_sql,
+    )
+    from apmbackend_spark.streaming.pipeline import run_available_now
+    from apmbackend_spark.streaming.stateful import alerts_stateful
+
+    bad = {
+        ("srvA", 60): range(0),
+        ("srvA", 360): range(5, 12),
+        ("srvB", 60): range(5, 30),
+        ("srvB", 360): range(8, 30),
+    }
+    rows = [
+        {
+            "timestamp": i * 10_000,
+            "server": srv,
+            "service": "svc",
+            "lag": lag,
+            "tpm": 1.0,
+            "average": 50_000.0 if i in hot else 100.0,
+            "per75": 100.0,
+            "per95": 100.0,
+            "averagesignal": 0,
+            "per75signal": 0,
+            "per95signal": 0,
+        }
+        for (srv, lag), hot in bad.items()
+        for i in range(41)
+    ]
+    schema = (
+        "timestamp long, server string, service string, lag int, tpm double, "
+        "average double, per75 double, per95 double, averagesignal int, "
+        "per75signal int, per95signal int"
+    )
+    fs = spark.createDataFrame(pd.DataFrame(rows), schema=schema)
+    cfg = AlertConfig(
+        hard_max_ms=10_000.0, window_size=6, required_bad=3, cooldown_minutes=1.0
+    )
+    cause = "average exceeded hard ms threshold"
+    want = [
+        (70_000, "srvA", 360, cause),
+        (140_000, "srvB", 60, cause),
+        (210_000, "srvB", 60, cause),
+        (280_000, "srvB", 60, cause),
+    ]
+
+    def key(r):
+        assert r[0] == r[1]  # alerttimestamp == entrytimestamp
+        return (r[0], r[2], r[4], r[5])
+
+    cols = ["alerttimestamp", "entrytimestamp", "server", "service", "lag", "cause"]
+    got = sorted(key(r) for r in alert_pipeline(fs, cfg).select(*cols).collect())
+    assert got == want
+
+    con = duckdb.connect()
+    con.register("fs_pdf", fs.toPandas())
+    oracle = con.sql(
+        "WITH RECURSIVE fs AS (SELECT * FROM fs_pdf)" + alert_pipeline_oracle_sql(cfg)
+    ).fetchall()
+    assert sorted(key(r) for r in oracle) == want
+
+    src = str(tmp_path / "fs_src")
+    for lo, hi in [(0, 8), (8, 20), (20, 41)]:
+        fs.where(
+            (F.col("timestamp") >= lo * 10_000) & (F.col("timestamp") < hi * 10_000)
+        ).coalesce(1).write.mode("append").parquet(src)
+    stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
+    streamed = run_available_now(
+        alerts_stateful(stream, cfg), str(tmp_path / "ckpt"), query_name="al_ties"
+    ).select(*cols).collect()
+    assert sorted(key(r) for r in streamed) == want

@@ -867,3 +867,46 @@ def test_wordpiece_encode_broadcast_vocab_no_python(spark):
     assert "BatchEvalPython" not in p and "ArrowEvalPython" not in p
     assert "CartesianProduct" not in p
     assert "BroadcastHashJoin" in p
+
+
+def test_python_stages_run_one_task_per_slot(spark, tmp_path):
+    """Every grouped-map Python stage shuffles into exactly
+    defaultParallelism partitions through the coalescing-exempt
+    REPARTITION_BY_NUM exchange (a Python task costs ~0.3 s to start, so
+    more tasks than slots only adds waves), and the alert tail is ONE
+    grouped map per service."""
+    import glob
+    import re
+
+    import __spark_entry__ as e
+
+    from apmbackend_spark.sources.logchunk import parse_logs_chunked
+    from apmbackend_spark.sources.loggen import generate
+    from apmbackend_spark.sources.logparse import classify_file, parse_logs
+
+    generate().write(str(tmp_path))
+    logs = f"{tmp_path}/logs/*/*.log"
+    chunkable = [p for p in glob.glob(logs) if classify_file(p) != "SOAP"]
+    cases = {
+        "parse_logs": (parse_logs(spark, logs), r"path#\d+"),
+        "logchunk scan": (
+            parse_logs_chunked(spark, chunkable, chunk_bytes=1 << 12),
+            r"path#\d+, off#\d+L",
+        ),
+        "zscore_recursive": (
+            e.queries()["zscore_recursive"](spark, SF_SMOKE),
+            r"server#\d+, service#\d+",
+        ),
+        "alert_pipeline": (e.queries()["alerts"](spark, SF_SMOKE), r"service#\d+"),
+    }
+    want = (str(spark.sparkContext.defaultParallelism), "REPARTITION_BY_NUM")
+    for name, (df, keys) in cases.items():
+        df.collect()  # the executed (final adaptive) plan
+        p = plan(df)
+        found = re.findall(
+            rf"^Arguments: hashpartitioning\({keys}, (\d+)\), (\w+)", p, re.M
+        )
+        assert found and set(found) == {want}, (name, found)
+        if name == "alert_pipeline":
+            final = p.split("\n+- == Initial Plan ==")[0]
+            assert final.count("FlatMapGroupsInPandas (") == 1, final
