@@ -2376,6 +2376,7 @@ def pq_search(
     Ties break on cand_id; self-matches excluded."""
     from pyspark.sql import Window
 
+    subs = None
     if cb is None:
         # standalone build: one pinned subvector frame shared by the
         # Lloyd training AND the corpus encode (r11)
@@ -2383,12 +2384,8 @@ def pq_search(
             eager=False
         )
         cb = _pq_codebook(embeddings, dims, m, mod, iters, subs=subs)
-        if enc is None:
-            enc = pq_codes_frame(
-                embeddings, dims, m, mod, iters, cb=cb, subs=subs
-            )
     if enc is None:
-        enc = pq_codes_frame(embeddings, dims, m, mod, iters, cb=cb)
+        enc = pq_codes_frame(embeddings, dims, m, mod, iters, cb=cb, subs=subs)
     qsubs = _pq_subs_frame(
         embeddings.where(F.col("vec_id") < n_queries), dims, m
     ).withColumnRenamed("vec_id", "query_id")

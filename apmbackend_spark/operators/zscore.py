@@ -24,6 +24,9 @@ Two implementations:
   * `zscore_recursive` — exact reference semantics for any influence, as an
     ordered per-key `applyInPandas` (Arrow-batched; each key's series is
     bounded by time span, not data volume, so groups stay executor-sized).
+    Its kernel, `_zscore_series_exact`, is also the streaming operator's
+    (streaming/stateful.py::zscore_stateful): each micro-batch resumes the
+    same exact scan from the histories stored in the state store.
 
 Float determinism: in `zscore_window` (influence=1) metric values entering
 the rolling stats are integer-valued (rounded ms), so window sums are exact
@@ -430,9 +433,10 @@ def zscore_step_oracle_sql(
     influence: float | dict = 0.1,
     metrics: Iterable[str] = METRICS,
 ) -> str:
-    """DuckDB twin of the `zscore_step` arithmetic (the streaming stateful
-    path, streaming/stateful.py::_zscore_scan_batch), appended to an `st`
-    CTE. The assembled query must start WITH RECURSIVE.
+    """DuckDB twin of the `zscore_step` arithmetic (the reference that
+    `_zscore_series_exact`, behind `zscore_recursive` and `zscore_stateful`,
+    replays bit for bit), appended to an `st` CTE. The assembled query must
+    start WITH RECURSIVE.
 
     `zscore_step` RECOMPUTES the window stats each step — Python `sum()`
     left-to-right over the FIFO window's non-null values, variance as the
@@ -627,7 +631,14 @@ def _zscore_series_exact(xs, lag, threshold, influence, block=1024):
     needed. Block size adapts (doubling on damp-free blocks, reset on
     damping) so signal-dense stretches waste at most a small block per
     signal. The property/bitwise tests in test_zscore.py guard the
-    equivalence, including across block boundaries."""
+    equivalence, including across block boundaries.
+
+    Returns (avg, lb, ub, signal, h), where ``h`` is the appended-value
+    history. Resuming a scan = prepending the last ``<= lag`` values of a
+    previous ``h`` to the new values: the scan starts at index ``lag``, so
+    the prepended values are read only as window context and as ``prev``
+    for damping (their null-ness equals the raw values', keeping ``nncum``
+    valid)."""
     import numpy as np
     from numpy.lib.stride_tricks import sliding_window_view
 
@@ -644,7 +655,7 @@ def _zscore_series_exact(xs, lag, threshold, influence, block=1024):
     ub_o = np.full(n, np.nan)
     sig_o = np.zeros(n, dtype=np.int32)
     if n <= lag:
-        return avg_o, lb_o, ub_o, sig_o
+        return avg_o, lb_o, ub_o, sig_o, h
 
     # exact O(1)-per-step non-null window counts from one prefix sum:
     # damping never changes null-ness (a signal requires x non-null), so
@@ -724,7 +735,7 @@ def _zscore_series_exact(xs, lag, threshold, influence, block=1024):
             h[cut] = damped_val
             i = cut + 1
             blk = min(16, block)
-    return avg_o, lb_o, ub_o, sig_o
+    return avg_o, lb_o, ub_o, sig_o, h
 
 
 def zscore_recursive_py(
@@ -734,17 +745,23 @@ def zscore_recursive_py(
     influence: float | dict,
     metrics: Iterable[str] = METRICS,
     overrides: dict | None = None,
+    *,
+    hists: list[list] | None = None,
 ) -> pd.DataFrame:
     """Driver-side-free sequential scan of ONE key's st series (sorted by
-    timestamp), exact reference semantics. Used inside applyInPandas.
+    timestamp), exact reference semantics (see _zscore_series_exact — a
+    rolling-sums variant drifted and was reverted). Used inside
+    applyInPandas (batch) and applyInPandasWithState (stream).
 
-    Columnar inner loop (plain lists, no iterrows): the recursion is
-    inherently sequential per key, and each step replays zscore_step's
-    arithmetic exactly (see _zscore_series_exact — a rolling-sums variant
-    drifted and was reverted), with constant integer windows short-cut to
-    O(1)."""
+    `hists` resumes the scan: one FIFO list per (lag, metric) slot, in
+    ``for lag in lags: for m in metrics`` order, holding the last <= lag
+    appended values (None = null). Each slot's history is prepended to the
+    new values, only the new rows are emitted, and the list is replaced in
+    place by the scan's last `lag` appended values. None starts every slot
+    empty."""
     import numpy as np
 
+    metrics = tuple(metrics)
     rows = rows.sort_values("timestamp", ignore_index=True)
     n = len(rows)
     base = rows[["timestamp", "server", "service", "tpm"]]
@@ -759,7 +776,7 @@ def zscore_recursive_py(
     service = rows["service"].iloc[0] if n else None
 
     frames = []
-    for lag in lags:
+    for li, lag in enumerate(lags):
         t_eff = _threshold_for(threshold, lag, service, overrides)
         i_eff = _influence_for(influence, lag, service, overrides)
         # one-shot dict-of-arrays construction in final column order:
@@ -772,17 +789,33 @@ def zscore_recursive_py(
             "tpm": base["tpm"],
             "lag": np.full(n, lag, dtype=np.int32),
         }
-        for m in metrics:
-            avg_o, lb_o, ub_o, sig_o = _zscore_series_exact(
-                metric_np[m], lag, t_eff, i_eff
+        for mi, m in enumerate(metrics):
+            xs = metric_np[m]
+            hist = None if hists is None else hists[li * len(metrics) + mi]
+            k = len(hist) if hist else 0
+            if k:
+                xs = np.concatenate((np.array(hist, dtype=np.float64), xs))
+            avg_o, lb_o, ub_o, sig_o, h = _zscore_series_exact(
+                xs, lag, t_eff, i_eff
             )
+            if hist is not None:
+                hist[:] = [None if v != v else v for v in h[-lag:].tolist()]
             data[m] = metric_np[m]
-            data[f"{m}avg"] = avg_o
-            data[f"{m}lb"] = lb_o
-            data[f"{m}ub"] = ub_o
-            data[f"{m}signal"] = sig_o
+            data[f"{m}avg"] = avg_o[k:]
+            data[f"{m}lb"] = lb_o[k:]
+            data[f"{m}ub"] = ub_o[k:]
+            data[f"{m}signal"] = sig_o[k:]
         frames.append(pd.DataFrame(data))
     return pd.concat(frames, ignore_index=True)
+
+
+def fs_schema(metrics: Iterable[str] = METRICS) -> str:
+    """DDL of the fs rows the z-score operators emit: the st columns, the
+    lag, then (value, avg, lb, ub, signal) per metric."""
+    parts = ["timestamp long", "server string", "service string", "tpm double", "lag int"]
+    for m in metrics:
+        parts += [f"{m} double", f"{m}avg double", f"{m}lb double", f"{m}ub double", f"{m}signal int"]
+    return ", ".join(parts)
 
 
 def zscore_recursive(
@@ -803,23 +836,6 @@ def zscore_recursive(
     lags = tuple(int(x) for x in lags)
     metrics = tuple(metrics)
 
-    schema_parts = [
-        "timestamp long",
-        "server string",
-        "service string",
-        "tpm double",
-        "lag int",
-    ]
-    for m in metrics:
-        schema_parts += [
-            f"{m} double",
-            f"{m}avg double",
-            f"{m}lb double",
-            f"{m}ub double",
-            f"{m}signal int",
-        ]
-    schema = ", ".join(schema_parts)
-
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
         return zscore_recursive_py(
             pdf, lags, threshold, influence, metrics, overrides
@@ -831,5 +847,5 @@ def zscore_recursive(
     return (
         st.repartition(task_slots(st.sparkSession), "server", "service")
         .groupBy("server", "service")
-        .applyInPandas(fn, schema=schema)
+        .applyInPandas(fn, schema=fs_schema(metrics))
     )

@@ -2,7 +2,11 @@
 influence-damped z-score (A9) and alert debounce/cooldown (F4/F5) as
 `applyInPandasWithState` stateful stages.
 
-State layout per (server, service) group: one array<double> history per
+Each stateful operator runs its batch twin's kernel, resumed from the
+state store: the z-score runs ``operators.zscore.zscore_recursive_py``,
+the alerts run ``operators.alerts.alert_service_scan``.
+
+Z-score state per (server, service) group: one array<double> history per
 (lag, metric) — exactly the reference's FIFO lists capped at lag
 (stream_calc_z_score.js:285-306), restored/persisted through Spark's state
 store (the reference's JSON resume files, stream_calc_stats.js:54-87).
@@ -23,11 +27,6 @@ import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.streaming.stateful_processor import (
-    StatefulProcessor,
-    StatefulProcessorHandle,
-    TimerValues,
-)
 from pyspark.sql.types import (
     ArrayType,
     DoubleType,
@@ -37,26 +36,12 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from apmbackend_spark.operators.zscore import METRICS, zscore_step
-
-
-def _out_schema(metrics: tuple[str, ...]) -> str:
-    parts = [
-        "timestamp long",
-        "server string",
-        "service string",
-        "tpm double",
-        "lag int",
-    ]
-    for m in metrics:
-        parts += [
-            f"{m} double",
-            f"{m}avg double",
-            f"{m}lb double",
-            f"{m}ub double",
-            f"{m}signal int",
-        ]
-    return ", ".join(parts)
+from apmbackend_spark.operators.zscore import (
+    DEFAULT_LAGS,
+    METRICS,
+    fs_schema,
+    zscore_recursive_py,
+)
 
 
 def _state_schema(lags: tuple[int, ...], metrics: tuple[str, ...]) -> StructType:
@@ -69,77 +54,19 @@ def _state_schema(lags: tuple[int, ...], metrics: tuple[str, ...]) -> StructType
     )
 
 
-def _zscore_scan_batch(
-    server: str,
-    service: str,
-    rows: pd.DataFrame,
-    hists: list[list],
-    lags: tuple[int, ...],
-    threshold: float,
-    influence: float,
-    metrics: tuple[str, ...],
-) -> pd.DataFrame:
-    """One micro-batch of the reference z-score scan for ONE key: rows must
-    be timestamp-sorted; `hists` (one FIFO per (lag, metric) slot) is
-    mutated in place so the caller can persist it to whichever state store
-    backs the operator. Shared by the applyInPandasWithState and
-    transformWithStateInPandas renderings — identical semantics by
-    construction."""
-    # Column-list iteration (no iterrows): identical per-step arithmetic
-    # (zscore_step on Python floats), ~10x less per-row overhead — the
-    # loop dominates the availableNow drain gates' wall time.
-    ts_vals = rows["timestamp"].tolist()
-    tpm_vals = rows["tpm"].tolist()
-    metric_vals = {
-        m: [None if pd.isna(v) else float(v) for v in rows[m].tolist()]
-        for m in metrics
-    }
-    n = len(ts_vals)
-    out = []
-    for li, lag in enumerate(lags):
-        for i in range(n):
-            rec = {
-                "timestamp": int(ts_vals[i]),
-                "server": server,
-                "service": service,
-                "tpm": float(tpm_vals[i]),
-                "lag": lag,
-            }
-            for mi, m in enumerate(metrics):
-                slot = li * len(metrics) + mi
-                x = metric_vals[m][i]
-                appended, avg, lb, ub, signal = zscore_step(
-                    lag, threshold, influence, x, hists[slot]
-                )
-                rec[m] = x
-                rec[f"{m}avg"] = avg
-                rec[f"{m}lb"] = lb
-                rec[f"{m}ub"] = ub
-                rec[f"{m}signal"] = signal
-                hists[slot].append(appended)
-                if len(hists[slot]) > lag:
-                    hists[slot].pop(0)
-            out.append(rec)
-    cols = ["timestamp", "server", "service", "tpm", "lag"]
-    for m in metrics:
-        cols += [m, f"{m}avg", f"{m}lb", f"{m}ub", f"{m}signal"]
-    return pd.DataFrame(out, columns=cols)
-
-
 def zscore_stateful(
     st_stream: DataFrame,
-    lags: Iterable[int] = (360, 8640),
+    lags: Iterable[int] = DEFAULT_LAGS,
     threshold: float = 3.0,
     influence: float = 0.1,
     metrics: Iterable[str] = METRICS,
 ) -> DataFrame:
-    """Exact reference z-score semantics as a streaming stateful operator.
-    Each micro-batch's rows are processed in timestamp order per key; the
-    histories live in the state store across batches."""
+    """Exact reference z-score semantics as a streaming stateful operator:
+    each key's micro-batch runs the batch kernel
+    (``operators.zscore.zscore_recursive_py``) resumed from the histories
+    in the state store, which it updates in place."""
     lags = tuple(int(x) for x in lags)
     metrics = tuple(metrics)
-    out_schema = _out_schema(metrics)
-    state_schema = _state_schema(lags, metrics)
     n_slots = len(lags) * len(metrics)
 
     def fn(
@@ -147,24 +74,20 @@ def zscore_stateful(
         pdfs: Iterator[pd.DataFrame],
         state: GroupState,
     ) -> Iterator[pd.DataFrame]:
-        server, service = key
         if state.exists:
-            stored = state.get
-            hists = [list(x) if x is not None else [] for x in stored]
+            hists = [list(x) if x is not None else [] for x in state.get]
         else:
             hists = [[] for _ in range(n_slots)]
-
-        rows = pd.concat(list(pdfs)).sort_values("timestamp")
-        out = _zscore_scan_batch(
-            server, service, rows, hists, lags, threshold, influence, metrics
+        out = zscore_recursive_py(
+            pd.concat(list(pdfs)), lags, threshold, influence, metrics, hists=hists
         )
         state.update(tuple(hists))
         yield out
 
     return st_stream.groupBy("server", "service").applyInPandasWithState(
         fn,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
+        outputStructType=fs_schema(metrics),
+        stateStructType=_state_schema(lags, metrics),
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
@@ -343,103 +266,6 @@ def alerts_stateful(fs_stream: DataFrame, cfg) -> DataFrame:
             outputMode="append",
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
-    )
-
-
-# ---------------------------------------------------------------------------
-# A9 on transformWithState (Spark 4 typed-state API) — the forward path.
-# ---------------------------------------------------------------------------
-
-
-class ZScoreProcessor(StatefulProcessor):
-    """A9 z-score as a ``transformWithStateInPandas`` StatefulProcessor —
-    semantically identical to ``zscore_stateful`` (both delegate to
-    ``_zscore_scan_batch``), rendered on Spark 4's typed-state API.
-
-    Why keep both renderings: applyInPandasWithState is the portable form
-    (works on any state store provider and needs no extra Python deps);
-    transformWithState is the forward path — typed per-key state handles
-    (ValueState here), independent state variables, TTL, and timers, backed
-    by the RocksDB state store. At 100 TB the state layout is the same
-    per-key O(lags x metrics x lag) histories, hash-partitioned; RocksDB
-    keeps multi-million-key state off-heap with incremental (changelog)
-    checkpointing.
-
-    Runtime requirement: the TWS Python worker speaks protobuf to the state
-    server, so `google.protobuf` must be importable on executors (it is not
-    in this CI container — the parity test skips itself there, and
-    zscore_stateful stays the default engine path).
-
-    Reference semantics carried over exactly: FIFO histories capped at lag,
-    null-preserving, influence damping on signal
-    (stream_calc_z_score.js:66-104,285-306).
-    """
-
-    def __init__(
-        self,
-        lags: tuple[int, ...] = (360, 8640),
-        threshold: float = 3.0,
-        influence: float = 0.1,
-        metrics: tuple[str, ...] = METRICS,
-    ) -> None:
-        self._lags = tuple(int(x) for x in lags)
-        self._threshold = float(threshold)
-        self._influence = float(influence)
-        self._metrics = tuple(metrics)
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._hist = handle.getValueState(
-            "hist", _state_schema(self._lags, self._metrics)
-        )
-
-    def handleInputRows(
-        self, key: tuple, rows: Iterator[pd.DataFrame], timerValues: TimerValues
-    ) -> Iterator[pd.DataFrame]:
-        server, service = key
-        n_slots = len(self._lags) * len(self._metrics)
-        if self._hist.exists():
-            stored = self._hist.get()
-            hists = [list(x) if x is not None else [] for x in stored]
-        else:
-            hists = [[] for _ in range(n_slots)]
-        pdfs = list(rows)
-        batch = pd.concat(pdfs).sort_values("timestamp")
-        out = _zscore_scan_batch(
-            server,
-            service,
-            batch,
-            hists,
-            self._lags,
-            self._threshold,
-            self._influence,
-            self._metrics,
-        )
-        self._hist.update(tuple(hists))
-        yield out
-
-    def close(self) -> None:
-        pass
-
-
-def zscore_tws(
-    st_stream: DataFrame,
-    lags: Iterable[int] = (360, 8640),
-    threshold: float = 3.0,
-    influence: float = 0.1,
-    metrics: Iterable[str] = METRICS,
-) -> DataFrame:
-    """``zscore_stateful`` on transformWithStateInPandas. Requires the
-    RocksDB state store provider
-    (spark.sql.streaming.stateStore.providerClass =
-    ...RocksDBStateStoreProvider); see tests/test_streaming.py for the
-    conf wiring."""
-    lags = tuple(int(x) for x in lags)
-    metrics = tuple(metrics)
-    return st_stream.groupBy("server", "service").transformWithStateInPandas(
-        statefulProcessor=ZScoreProcessor(lags, threshold, influence, metrics),
-        outputStructType=_out_schema(metrics),
-        outputMode="append",
-        timeMode="None",
     )
 
 

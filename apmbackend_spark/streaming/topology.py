@@ -29,7 +29,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from apmbackend_spark.operators.alerts import AlertConfig
-from apmbackend_spark.operators.zscore import METRICS
+from apmbackend_spark.operators.zscore import fs_schema
 from apmbackend_spark.streaming.pipeline import tx_stream, window_stats_stream
 from apmbackend_spark.streaming.stateful import alerts_stateful, zscore_stateful
 
@@ -42,13 +42,6 @@ ST_HANDOFF_SCHEMA = (
     "timestamp long, server string, service string, tpm double, "
     "average double, per75 double, per95 double"
 )
-
-
-def _fs_handoff_schema(metrics=METRICS) -> str:
-    parts = ["timestamp long", "server string", "service string", "tpm double", "lag int"]
-    for m in metrics:
-        parts += [f"{m} double", f"{m}avg double", f"{m}lb double", f"{m}ub double", f"{m}signal int"]
-    return ", ".join(parts)
 
 
 def _run_stage(
@@ -157,7 +150,7 @@ def run_apm_topology(
     if wire:
         fs_in = qu.wire_to_fs(spark.readStream.text(dirs["fs"]))
     else:
-        fs_in = spark.readStream.schema(_fs_handoff_schema()).parquet(dirs["fs"])
+        fs_in = spark.readStream.schema(fs_schema()).parquet(dirs["fs"])
     al = alerts_stateful(fs_in, cfg)
     _run_stage(al, dirs["al"], f"{work_dir}/ckpt_al", timeout_s)
 
@@ -248,7 +241,7 @@ def run_apm_topology_concurrent(
         .trigger(processingTime="300 milliseconds")
         .start()
     )
-    fs_in = spark.readStream.schema(_fs_handoff_schema()).parquet(dirs["fs"])
+    fs_in = spark.readStream.schema(fs_schema()).parquet(dirs["fs"])
     al = alerts_stateful(fs_in, cfg)
     q4 = (
         al.writeStream.format("parquet")
@@ -366,7 +359,7 @@ def stream_topology_gate(
         from apmbackend_spark.sources import queue as qu
 
         return qu.wire_to_fs(spark.read.text(dirs["fs"]))
-    return spark.read.schema(_fs_handoff_schema()).parquet(dirs["fs"])
+    return spark.read.schema(fs_schema()).parquet(dirs["fs"])
 
 
 def _write_time_deliveries(df, src: str, ts_col: str, bounds: list[int]) -> None:
@@ -474,7 +467,7 @@ def zscore_stateful_drain_gate(
         _run_stage(fs, out, os.path.join(work, "ck"), timeout_s)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return spark.read.schema(_fs_handoff_schema()).parquet(out)
+    return spark.read.schema(fs_schema()).parquet(out)
 
 
 # ---------------------------------------------------------------------------

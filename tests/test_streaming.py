@@ -3,7 +3,6 @@ stateful z-score, plus the foreachBatch fan-out sink."""
 
 from __future__ import annotations
 
-import math
 import shutil
 import tempfile
 
@@ -52,33 +51,59 @@ def test_window_stats_stream_matches_batch(spark, tmpdir):
     assert len(got) >= 0.95 * len(batch)
 
 
-def test_zscore_stateful_matches_recursive_across_batches(spark, tmpdir):
-    import pandas as pd
+_ST_DDL = (
+    "timestamp long, server string, service string, tpm double, "
+    "average double, per75 double, per95 double"
+)
 
+# (server, row, metric) cells left null: one in warm-up, and some in the
+# last lag=30 rows before the delivery cuts (40/80 and 50/90) so a null
+# crosses the state store
+_ST_NULLS = {
+    ("srv0", 25, "average"),
+    ("srv0", 45, "per75"),
+    ("srv0", 70, "average"),
+    ("srv1", 79, "per95"),
+    ("srv1", 105, "per75"),
+}
+
+
+def _zscore_st_rows():
+    """Two keys x 120 intervals with a step change at 100 and a few nulls,
+    as _ST_DDL tuples."""
+    rows = []
+    for i in range(120):
+        for srv in ("srv0", "srv1"):
+            base = 100.0 if i < 100 else 5000.0  # step change at i=100
+            vals = [
+                None if (srv, i, m) in _ST_NULLS else base + (i % mod)
+                for m, mod in (("average", 7), ("per75", 5), ("per95", 3))
+            ]
+            rows.append((i * 10_000, srv, "svc", 1.0, *vals))
+    return rows
+
+
+def _assert_fs_equal(got: dict, expect: dict) -> int:
+    """Exact equality of z-score rows keyed alike; returns |signals|."""
+    assert len(got) == len(expect) > 0
+    n_sig = 0
+    for k, e in expect.items():
+        r = got[k]
+        for m in ("average", "per75", "per95"):
+            n_sig += abs(r[f"{m}signal"])
+            for f in (m, f"{m}avg", f"{m}lb", f"{m}ub", f"{m}signal"):
+                assert r[f] == e[f], (k, f, r[f], e[f])
+    return n_sig
+
+
+def test_zscore_stateful_matches_recursive_across_batches(spark, tmpdir):
     from pyspark.sql import functions as F
 
     from apmbackend_spark.operators.zscore import zscore_recursive
     from apmbackend_spark.streaming.pipeline import run_available_now
     from apmbackend_spark.streaming.stateful import zscore_stateful
 
-    # Small deterministic st series for two keys.
-    rows = []
-    for i in range(120):
-        for srv in ("srv0", "srv1"):
-            base = 100.0 if i < 100 else 5000.0  # step change at i=100
-            rows.append(
-                {
-                    "timestamp": i * 10_000,
-                    "server": srv,
-                    "service": "svc",
-                    "tpm": 1.0,
-                    "average": base + (i % 7),
-                    "per75": base + (i % 5),
-                    "per95": base + (i % 3),
-                }
-            )
-    pdf = pd.DataFrame(rows)
-    st = spark.createDataFrame(pdf)
+    st = spark.createDataFrame(_zscore_st_rows(), _ST_DDL)
 
     # Split into 3 time-sliced parquet files -> 3 micro-batches in order.
     src = f"{tmpdir}/st_src"
@@ -90,10 +115,7 @@ def test_zscore_stateful_matches_recursive_across_batches(spark, tmpdir):
             .parquet(src)
         )
 
-    st_stream = spark.readStream.schema(
-        "timestamp long, server string, service string, tpm double, "
-        "average double, per75 double, per95 double"
-    ).option("maxFilesPerTrigger", 1).parquet(src)
+    st_stream = spark.readStream.schema(_ST_DDL).option("maxFilesPerTrigger", 1).parquet(src)
 
     got = run_available_now(
         zscore_stateful(st_stream, lags=(30,), threshold=3.0, influence=0.1),
@@ -108,20 +130,9 @@ def test_zscore_stateful_matches_recursive_across_batches(spark, tmpdir):
             st, lags=(30,), threshold=3.0, influence=0.1
         ).collect()
     }
-    assert len(got) == len(expect) > 0
-    n_sig = 0
-    for r in got:
-        e = expect[(r["server"], r["timestamp"])]
-        for m in ("average", "per75", "per95"):
-            assert r[f"{m}signal"] == e[f"{m}signal"]
-            n_sig += abs(r[f"{m}signal"])
-            for f in (f"{m}avg", f"{m}lb", f"{m}ub"):
-                a, b = r[f], e[f]
-                if a is None or b is None:
-                    assert a == b, (r["timestamp"], f, a, b)
-                else:
-                    assert math.isclose(a, b, rel_tol=1e-12), (r["timestamp"], f)
-    assert n_sig > 0  # the step change must actually signal
+    assert len(got) == len(expect)
+    got = {(r["server"], r["timestamp"]): r for r in got}
+    assert _assert_fs_equal(got, expect) > 0  # the step change must signal
 
 
 def test_bucket_zerofill_emits_silent_intervals(spark, tmpdir):
@@ -590,95 +601,6 @@ def test_acct_enrich_stream_matches_batch(spark, tmpdir):
     assert n_soap_got == n_soap_batch
 
 
-def test_zscore_tws_matches_recursive_across_batches(spark, tmpdir):
-    # transformWithStateInPandas rendering (RocksDB state store) must agree
-    # with both the batch recursive operator and (by construction) the
-    # applyInPandasWithState rendering. The TWS Python worker requires
-    # protobuf (not present in this container): skip, don't fail, there.
-    pytest.importorskip("google.protobuf")
-    import pandas as pd
-
-    from pyspark.sql import functions as F
-
-    from apmbackend_spark.operators.zscore import zscore_recursive
-    from apmbackend_spark.streaming.pipeline import run_available_now
-    from apmbackend_spark.streaming.stateful import zscore_tws
-
-    rows = []
-    for i in range(120):
-        for srv in ("srv0", "srv1"):
-            base = 100.0 if i < 100 else 5000.0
-            rows.append(
-                {
-                    "timestamp": i * 10_000,
-                    "server": srv,
-                    "service": "svc",
-                    "tpm": 1.0,
-                    "average": base + (i % 7),
-                    "per75": base + (i % 5),
-                    "per95": base + (i % 3),
-                }
-            )
-    pdf = pd.DataFrame(rows)
-    st = spark.createDataFrame(pdf)
-
-    src = f"{tmpdir}/st_tws_src"
-    for lo, hi in [(0, 40), (40, 80), (80, 120)]:
-        (
-            st.where(
-                (F.col("timestamp") >= lo * 10_000)
-                & (F.col("timestamp") < hi * 10_000)
-            )
-            .coalesce(1)
-            .write.mode("append")
-            .parquet(src)
-        )
-
-    st_stream = spark.readStream.schema(
-        "timestamp long, server string, service string, tpm double, "
-        "average double, per75 double, per95 double"
-    ).option("maxFilesPerTrigger", 1).parquet(src)
-
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        got = run_available_now(
-            zscore_tws(st_stream, lags=(30,), threshold=3.0, influence=0.1),
-            f"{tmpdir}/ckpt_tws",
-            query_name="zs_tws",
-            output_mode="append",
-        ).collect()
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-
-    expect = {
-        (r["server"], r["timestamp"]): r
-        for r in zscore_recursive(
-            st, lags=(30,), threshold=3.0, influence=0.1
-        ).collect()
-    }
-    assert len(got) == len(expect) > 0
-    n_sig = 0
-    for r in got:
-        e = expect[(r["server"], r["timestamp"])]
-        for m in ("average", "per75", "per95"):
-            assert r[f"{m}signal"] == e[f"{m}signal"]
-            n_sig += abs(r[f"{m}signal"])
-            for f in (f"{m}avg", f"{m}lb", f"{m}ub"):
-                a, b = r[f], e[f]
-                if a is None or b is None:
-                    assert a == b, (r["timestamp"], f, a, b)
-                else:
-                    assert math.isclose(a, b, rel_tol=1e-12), (r["timestamp"], f)
-    assert n_sig > 0
-
-
 def test_zscore_stateful_resumes_from_checkpoint_across_query_restarts(
     spark, tmpdir
 ):
@@ -689,31 +611,12 @@ def test_zscore_stateful_resumes_from_checkpoint_across_query_restarts(
     the batch reference exactly — no reprocessed rows, and the restored
     histories must continue the recursion mid-series (any state loss
     would show as a fresh warmup: NULL bounds after the restart point)."""
-    import math
-
-    import pandas as pd
-
     from pyspark.sql import functions as F
 
     from apmbackend_spark.operators.zscore import zscore_recursive
     from apmbackend_spark.streaming.stateful import zscore_stateful
 
-    rows = []
-    for i in range(120):
-        for srv in ("srv0", "srv1"):
-            base = 100.0 if i < 100 else 5000.0
-            rows.append(
-                {
-                    "timestamp": i * 10_000,
-                    "server": srv,
-                    "service": "svc",
-                    "tpm": 1.0,
-                    "average": base + (i % 7),
-                    "per75": base + (i % 5),
-                    "per95": base + (i % 3),
-                }
-            )
-    st = spark.createDataFrame(pd.DataFrame(rows))
+    st = spark.createDataFrame(_zscore_st_rows(), _ST_DDL)
     src, out, ck = f"{tmpdir}/src", f"{tmpdir}/out", f"{tmpdir}/ck"
 
     def deliver(lo, hi):
@@ -729,12 +632,7 @@ def test_zscore_stateful_resumes_from_checkpoint_across_query_restarts(
 
     def drain():
         stream = (
-            spark.readStream.schema(
-                "timestamp long, server string, service string, tpm double, "
-                "average double, per75 double, per95 double"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
+            spark.readStream.schema(_ST_DDL).option("maxFilesPerTrigger", 1).parquet(src)
         )
         q = (
             zscore_stateful(stream, lags=(30,), threshold=3.0, influence=0.1)
@@ -763,16 +661,7 @@ def test_zscore_stateful_resumes_from_checkpoint_across_query_restarts(
         for r in zscore_recursive(st, lags=(30,), threshold=3.0, influence=0.1).collect()
     }
     assert len(got) == len(expect) == 2 * 120  # exactly once, no replays
-    for k, e in expect.items():
-        r = got[k]
-        for m in ("average", "per75", "per95"):
-            assert r[f"{m}signal"] == e[f"{m}signal"], (k, m)
-            for f in (f"{m}avg", f"{m}lb", f"{m}ub"):
-                a, b = r[f], e[f]
-                if a is None or b is None:
-                    assert a == b, (k, f, a, b)
-                else:
-                    assert math.isclose(a, b, rel_tol=1e-12), (k, f)
+    _assert_fs_equal(got, expect)
     # the restart fell mid-warmup (50 < ... < 50+30): rows right after the
     # restart DO have bounds, proving the FIFO state was restored (a state
     # loss would re-warm and leave them NULL)

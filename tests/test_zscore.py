@@ -251,16 +251,17 @@ def test_zscore_chunked_matches_global_on_dense_grid(spark):
 
 
 def test_incremental_scan_matches_step_loop_property():
-    # The O(1)-per-step incremental scan (rolling sums + drift resets) must
-    # agree with a naive zscore_step loop on arbitrary series — including
-    # nulls, constant runs (variance-0 quirk), spikes, and series long
-    # enough to cross the 8192-op drift-reset boundary.
-    import math
-
+    # The exact block scan (_zscore_series_exact) must agree BITWISE with a
+    # naive zscore_step loop on arbitrary series — including nulls,
+    # constant runs (variance-0 quirk), spikes and damped appends — both
+    # in one shot and resumed piecewise from stored histories through
+    # zscore_recursive_py(..., hists=...), the streaming operator's path.
+    import pandas as pd
     from hypothesis import example, given, settings, strategies as st_
 
     from apmbackend_spark.operators.zscore import (
         _zscore_series_exact,
+        zscore_recursive_py,
         zscore_step,
     )
 
@@ -270,11 +271,22 @@ def test_incremental_scan_matches_step_loop_property():
         st_.just(500.0),  # encourage constant runs
     )
 
+    def assert_matches(where, got, want):
+        avg_o, lb_o, ub_o, sig_o = got
+        for i, (avg, lb, ub, signal) in enumerate(want):
+            assert sig_o[i] == signal, (where, i)
+            for g, w in ((avg_o[i], avg), (lb_o[i], lb), (ub_o[i], ub)):
+                if w is None:
+                    assert math.isnan(g), (where, i)
+                else:
+                    assert g == w, (where, i, g, w)
+
     @settings(max_examples=40, deadline=None)
     @given(
         xs=st_.lists(val, min_size=1, max_size=300),
         lag=st_.integers(min_value=1, max_value=12),
         influence=st_.sampled_from([0.0, 0.1, 1.0]),
+        cuts=st_.lists(st_.integers(min_value=1, max_value=299), max_size=8),
     )
     # round-4 counterexamples, pinned so the regression stays caught without
     # the local .hypothesis example database: a damped (non-integer) append
@@ -282,31 +294,70 @@ def test_incremental_scan_matches_step_loop_property():
     # variance-0 quirk (spurious signal -1; non-NaN bounds where the
     # reference gives undefined)
     @example(
-        xs=[None, 1426.0, 2351.0, 500.0, None, None, 500.0], lag=3, influence=0.1
+        xs=[None, 1426.0, 2351.0, 500.0, None, None, 500.0],
+        lag=3,
+        influence=0.1,
+        cuts=[],
     )
-    @example(xs=[1426.0, 2351.0, 500.0, None, None], lag=2, influence=0.1)
-    def check(xs, lag, influence):
+    @example(xs=[1426.0, 2351.0, 500.0, None, None], lag=2, influence=0.1, cuts=[])
+    # a spike after a constant-ish run: damped append at 6, null at 8
+    @example(
+        xs=[10.0, 12.0, 11.0, 10.0, 12.0, 11.0, 900.0, 11.0, None, 10.0, 12.0],
+        lag=4,
+        influence=0.1,
+        cuts=[3],
+    )
+    def check(xs, lag, influence, cuts):
         threshold = 3.0
-        # block=7 forces the vectorized/scalar hand-off every few steps —
-        # the block boundary logic must be invisible
-        for block in (4096, 7):
-            avg_o, lb_o, ub_o, sig_o = _zscore_series_exact(
-                xs, lag, threshold, influence, block=block
+        want, hist, damped = [], [], []
+        for i, x in enumerate(xs):
+            appended, avg, lb, ub, signal = zscore_step(
+                lag, threshold, influence, x, hist
             )
-            hist = []
-            for i, x in enumerate(xs):
-                appended, avg, lb, ub, signal = zscore_step(
-                    lag, threshold, influence, x, hist
+            want.append((avg, lb, ub, signal))
+            if appended != x:
+                damped.append(i)
+            hist.append(appended)
+            if len(hist) > lag:
+                hist.pop(0)
+
+        # block=7 forces the block hand-off every few steps — the block
+        # boundary logic must be invisible
+        for block in (4096, 7):
+            got = _zscore_series_exact(xs, lag, threshold, influence, block=block)
+            assert_matches(("one-shot", block), got[:4], want)
+
+        # piecewise: the drawn cuts plus one inside warm-up, one on the
+        # first null, and one right after the first damped append
+        n = len(xs)
+        nulls = [i for i, x in enumerate(xs) if x is None]
+        forced = [lag // 2] + nulls[:1] + [s + 1 for s in damped[:1]]
+        bounds = sorted({c for c in cuts + forced if 0 < c < n} | {0, n})
+        hists = [[]]
+        pieces = []
+        for lo, hi in zip(bounds, bounds[1:]):
+            rows = pd.DataFrame(
+                {
+                    "timestamp": range(lo, hi),
+                    "server": "s",
+                    "service": "svc",
+                    "tpm": 1.0,
+                    "average": pd.Series(xs[lo:hi], dtype="float64"),
+                }
+            )
+            pieces.append(
+                zscore_recursive_py(
+                    rows, (lag,), threshold, influence, ("average",), hists=hists
                 )
-                hist.append(appended)
-                if len(hist) > lag:
-                    hist.pop(0)
-                assert sig_o[i] == signal, (i, xs, lag, block)
-                for got, want in ((avg_o[i], avg), (lb_o[i], lb), (ub_o[i], ub)):
-                    if want is None:
-                        assert math.isnan(got), (i, xs, lag, block)
-                    else:
-                        assert math.isclose(got, want, rel_tol=1e-9, abs_tol=1e-9)
+            )
+            assert len(hists[0]) == min(hi, lag)
+        out = pd.concat(pieces, ignore_index=True)
+        assert list(out["timestamp"]) == list(range(n))
+        cols = ("averageavg", "averagelb", "averageub", "averagesignal")
+        assert_matches(
+            ("piecewise", bounds), [out[c].to_numpy() for c in cols], want
+        )
+        assert [None if v is None else float(v) for v in hist] == hists[0]
 
     check()
 
@@ -328,7 +379,7 @@ def test_exact_scan_long_series_bitwise():
         for i in range(9000)
     ]
     lag = 64
-    avg_o, lb_o, ub_o, sig_o = _zscore_series_exact(xs, lag, 3.0, 0.1)
+    avg_o, lb_o, ub_o, sig_o, _ = _zscore_series_exact(xs, lag, 3.0, 0.1)
     hist = []
     for i, x in enumerate(xs):
         appended, avg, lb, ub, signal = zscore_step(lag, 3.0, 0.1, x, hist)
