@@ -528,72 +528,55 @@ def hist_quantiles(events: DataFrame) -> DataFrame:
     )
 
 
-def _hist_est_sql(q: float) -> str:
-    # DuckDB list_reduce has no init value: prepend a zero accumulator of
-    # the SAME struct type as the transformed elements (the funnel_steps
-    # unified-struct pattern) and fold left-to-right over the sorted bins.
-    # The lambda body MUST be a whole-struct CASE, not one struct_pack
-    # with per-field conditionals: DuckDB 1.0 mis-resolves `a.<field>`
-    # references inside a bare struct_pack lambda body (a.cum reads the
-    # NEW cum — verified probe), while the funnel-style CASE-of-structs
-    # form evaluates the accumulator correctly.
-    target = f"CAST(ceil({q / 100.0!r} * CAST(n AS DOUBLE)) AS BIGINT)"
-    lo = "CAST(x.lo AS DOUBLE)"
+def _sketch_quantiles_sql(bins: str, key: str) -> str:
+    """DuckDB twin of ``_hist_est`` / ``_subbin_est`` over a relation
+    ``bins`` of (``key``, lo, width, cnt) rows, one per non-empty bin:
+    returns (key, n, q50, q95, q99). A window running count gives each
+    bin's cum; per quantile, the first bin (in lo order) whose cum reaches
+    target = ceil(q*n) interpolates lo + width * (target - cum_before) /
+    cnt, then /100 — the Spark fold's double ops in the same order. Plain
+    window sums, no list_reduce: DuckDB 1.0's fold over per-row lists
+    returned another row's result at some thread counts."""
+    targets = {
+        q: f"CAST(ceil({q / 100.0!r} * CAST(n AS DOUBLE)) AS BIGINT)"
+        for q in HIST_QS
+    }
+    ests = ",\n       ".join(
+        f"""arg_min(CAST(lo AS DOUBLE) + CAST(width AS DOUBLE)
+               * (CAST({t} - (cum - cnt) AS DOUBLE) / CAST(cnt AS DOUBLE)),
+               lo) FILTER (WHERE cum >= {t}) / 100.0 AS q{int(q)}"""
+        for q, t in targets.items()
+    )
     return f"""
-        list_reduce(
-            list_prepend(
-                struct_pack(cum := CAST(0 AS BIGINT),
-                            est := CAST(NULL AS DOUBLE),
-                            cnt := CAST(0 AS BIGINT),
-                            lo := CAST(0 AS BIGINT)),
-                list_transform(
-                    arr,
-                    e -> struct_pack(cum := e.cnt,
-                                     est := CAST(NULL AS DOUBLE),
-                                     cnt := e.cnt, lo := e.lo)
-                )
-            ),
-            (a, x) -> CASE
-                WHEN a.est IS NULL AND a.cum + x.cnt >= {target}
-                THEN struct_pack(
-                        cum := a.cum + x.cnt,
-                        est := {lo} + {lo}
-                               * (CAST({target} - a.cum AS DOUBLE)
-                                  / CAST(x.cnt AS DOUBLE)),
-                        cnt := CAST(0 AS BIGINT), lo := CAST(0 AS BIGINT))
-                ELSE struct_pack(
-                        cum := a.cum + x.cnt, est := a.est,
-                        cnt := CAST(0 AS BIGINT), lo := CAST(0 AS BIGINT))
-            END
-        ).est / 100.0"""
+SELECT {key}, n,
+       {ests}
+FROM (
+    SELECT {key}, lo, width, cnt,
+           CAST(SUM(cnt) OVER (PARTITION BY {key} ORDER BY lo
+                               ROWS BETWEEN UNBOUNDED PRECEDING
+                                        AND CURRENT ROW) AS BIGINT) AS cum,
+           CAST(SUM(cnt) OVER (PARTITION BY {key}) AS BIGINT) AS n
+    FROM {bins}
+)
+GROUP BY {key}, n
+"""
 
 
 def hist_quantiles_oracle_sql() -> str:
-    ests = ",\n       ".join(
-        f"({_hist_est_sql(q)}) AS q{int(q)}" for q in HIST_QS
-    )
     return f"""
-WITH binned AS (
-    SELECT event_type,
-           length(bin(GREATEST(
-               CAST(1 AS BIGINT),
-               CAST(floor(value * 100.0 + 0.5) AS BIGINT)))) - 1 AS bin,
-           COUNT(*) AS cnt
-    FROM events WHERE value IS NOT NULL
+WITH bins AS (
+    SELECT event_type, lo, lo AS width, COUNT(*) AS cnt
+    FROM (
+        SELECT event_type,
+               CAST(1::BIGINT << CAST(length(bin(GREATEST(
+                   CAST(1 AS BIGINT),
+                   CAST(floor(value * 100.0 + 0.5) AS BIGINT)))) - 1 AS INT)
+                    AS BIGINT) AS lo
+        FROM events WHERE value IS NOT NULL
+    )
     GROUP BY 1, 2
-), g AS (
-    SELECT event_type,
-           CAST(SUM(cnt) AS BIGINT) AS n,
-           list_sort(list({{'bin': CAST(bin AS BIGINT),
-                            'cnt': CAST(cnt AS BIGINT),
-                            'lo': CAST(1::BIGINT << CAST(bin AS INT)
-                                       AS BIGINT)}})) AS arr
-    FROM binned GROUP BY event_type
 )
-SELECT event_type, n,
-       {ests}
-FROM g
-"""
+{_sketch_quantiles_sql("bins", "event_type")}"""
 
 
 # ---------------------------------------------------------------------------
@@ -638,9 +621,12 @@ def _subbin_est(arr, n, q: float):
 
 
 def _subbin_est_sql(q: float) -> str:
-    """DuckDB twin of ``_subbin_est`` — the CASE-of-structs list_reduce
-    form (_hist_est_sql's documented workaround for DuckDB's
-    struct_pack lambda field resolution)."""
+    """DuckDB twin of ``_subbin_est`` as a CASE-of-structs list_reduce
+    fold over a per-row ``arr`` — kept only for
+    langid.ccnet_buckets_sketch_oracle_sql. Not a trusted oracle: on
+    DuckDB 1.0 the fold can return another row's result, depending on the
+    thread count (it did for subbin_quantiles at sf0.01 under
+    ``SET threads=1``); ``_sketch_quantiles_sql`` is the window-sum form."""
     target = f"CAST(ceil({q / 100.0!r} * CAST(n AS DOUBLE)) AS BIGINT)"
     zero = "cnt := CAST(0 AS BIGINT), lo := CAST(0 AS BIGINT), width := CAST(0 AS BIGINT)"
     return f"""
@@ -709,11 +695,8 @@ def subbin_quantiles(events: DataFrame) -> DataFrame:
 
 
 def subbin_quantiles_oracle_sql() -> str:
-    ests = ",\n       ".join(
-        f"({_subbin_est_sql(q)}) AS q{int(q)}" for q in HIST_QS
-    )
     return f"""
-WITH binned AS (
+WITH bins AS (
     SELECT event_type,
            CAST((c >> shift) << shift AS BIGINT) AS lo,
            CAST(1::BIGINT << shift AS BIGINT) AS width,
@@ -729,18 +712,8 @@ WITH binned AS (
         )
     )
     GROUP BY 1, 2, 3
-), g AS (
-    SELECT event_type,
-           CAST(SUM(cnt) AS BIGINT) AS n,
-           list_sort(list({{'lo': CAST(lo AS BIGINT),
-                            'width': CAST(width AS BIGINT),
-                            'cnt': CAST(cnt AS BIGINT)}})) AS arr
-    FROM binned GROUP BY event_type
 )
-SELECT event_type, n,
-       {ests}
-FROM g
-"""
+{_sketch_quantiles_sql("bins", "event_type")}"""
 
 
 # ---------------------------------------------------------------------------

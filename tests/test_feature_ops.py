@@ -5,7 +5,8 @@ maintenance.
 Same contract as test_pipeline_ops.py: semantics against an independent
 pure-Python reference or an in-Spark differential (NOT the DuckDB oracle —
 scripts/check_oracle.py grades that), plus a physical-plan assertion per
-scale claim."""
+scale claim. One exception checks an oracle itself: the sketch-quantile
+oracles against the same pure-Python rule, at several DuckDB thread counts."""
 
 from __future__ import annotations
 
@@ -15,7 +16,7 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_CORRECT, SF_SMOKE
 
 
 def plan(df) -> str:
@@ -239,6 +240,78 @@ def test_hist_quantiles_interpolates_exactly_on_tiny_case(spark):
     assert r["q50"] == (256 + 256 * (2 - 1) / 3) / 100.0
     # q99: target 4 -> est = 256 + 256*(4-1)/3 = 512 (bin top)
     assert r["q99"] == 5.12
+
+
+def _sketch_quantiles_py(sf_dir: str, binner) -> dict:
+    """The documented sketch rule (`_hist_est` / `_subbin_est` docstrings)
+    in pure Python: cents = max(1, floor(value*100 + 0.5)); `binner(cents)`
+    gives the bin's (lo, width); per event_type, the first bin in lo order
+    whose running count reaches ceil(q*n) gives
+    (lo + width * (target - cum_before) / cnt) / 100."""
+    import pyarrow.parquet as pq
+
+    from apmbackend_spark.operators.profile import HIST_QS
+
+    cols = ("event_type", "value")
+    t = pq.read_table(f"{sf_dir}/events.parquet", columns=list(cols))
+    bins: dict[str, dict[tuple[int, int], int]] = {}
+    for et, v in zip(*(t.column(c).to_pylist() for c in cols)):
+        if v is not None:
+            b = binner(max(1, math.floor(v * 100.0 + 0.5)))
+            per = bins.setdefault(et, {})
+            per[b] = per.get(b, 0) + 1
+    out = {}
+    for et, per in bins.items():
+        n = sum(per.values())
+        row = [n]
+        for q in HIST_QS:
+            target = math.ceil(q / 100.0 * float(n))
+            cum = 0
+            for (lo, width), cnt in sorted(per.items()):
+                if cum + cnt >= target:
+                    frac = float(target - cum) / float(cnt)
+                    row.append((float(lo) + float(width) * frac) / 100.0)
+                    break
+                cum += cnt
+        out[et] = tuple(row)
+    return out
+
+
+def _octave_bin(c: int) -> tuple[int, int]:
+    lo = 1 << (c.bit_length() - 1)
+    return lo, lo
+
+
+def _sub_octave_bin(c: int) -> tuple[int, int]:
+    shift = max(c.bit_length() - 7, 0)
+    return (c >> shift) << shift, 1 << shift
+
+
+@pytest.mark.parametrize(
+    "sf_dir", [SF_SMOKE, SF_CORRECT], ids=["sf0.001", "sf0.01"]
+)
+def test_sketch_quantile_oracles_match_python_rule_at_any_thread_count(sf_dir):
+    """Both sketch oracles equal the documented rule exactly whatever
+    DuckDB's thread count (DuckDB only, no Spark). A list_reduce fold over
+    per-row lists returned another row's estimate on DuckDB 1.0 at some
+    thread counts (hist `view` q99 = `purchase`'s at sf0.001, 1 or 4
+    threads)."""
+    from apmbackend_spark.operators.profile import (
+        hist_quantiles_oracle_sql,
+        subbin_quantiles_oracle_sql,
+    )
+    from apmbackend_spark.testing import duckdb_connect
+
+    cases = [
+        ("hist", hist_quantiles_oracle_sql(), _octave_bin),
+        ("subbin", subbin_quantiles_oracle_sql(), _sub_octave_bin),
+    ]
+    con = duckdb_connect(sf_dir)
+    for threads in (1, 2, 4, 8):
+        con.sql(f"SET threads={threads}")
+        for name, sql, binner in cases:
+            got = {r[0]: tuple(r[1:]) for r in con.sql(sql).fetchall()}
+            assert got == _sketch_quantiles_py(sf_dir, binner), (name, threads)
 
 
 def test_hist_quantiles_single_scan_single_wide_agg_no_python(spark):
