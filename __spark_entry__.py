@@ -310,15 +310,14 @@ def _q_topology_broker(spark: SparkSession, sf_dir: str) -> DataFrame:
     # composed INSIDE the pipeline, the reference's full queue map);
     # graded frame = the decoded db_insert spool (AlertEntries with the
     # triggering fs entry's lag + metrics recovered from the embedded
-    # escaped entry), at a 12 h slice. The graded path is the SEQUENTIAL
-    # availableNow drain again as of r11: same-session min-of-3 A/B at
-    # sf0.01 AND sf0.1 both put the r10 concurrent schedule behind it
-    # (medians 15.3 vs 27.5 s and 27.8 vs 37.8 s — on one box the four
-    # stages share every core, so pipelining buys nothing while the
-    # per-chunk publish/settle cycles and per-micro-batch state-store
-    # commits cost O(volume) extra). The concurrent schedule remains the
-    # multi-node deployment shape, byte-identical and parity-pinned
-    # (test_streaming.py), so the schedule choice is pure scheduling.
+    # escaped entry), at a 12 h slice. The graded path is the sequential
+    # availableNow drain: same-session min-of-3 A/B at sf0.01 and sf0.1
+    # both put the r10 concurrent schedule behind it (medians 15.3 vs
+    # 27.5 s and 27.8 vs 37.8 s — on one box the four stages share every
+    # core, so pipelining buys nothing while per-micro-batch state-store
+    # commits cost extra), and that concurrent fork has since been
+    # deleted. The gate builds its stages from the same definition as
+    # every other topology runner (streaming/topology.py::_apm_stages).
     return topo.topology_broker_gate(
         spark,
         sf_dir,

@@ -64,9 +64,10 @@ class MiniBroker:
     byte-identical to the original single-queue protocol, so existing
     gates grade the same wire traffic. Each connection is served by its
     own thread (amqplib multiplexes channels the same way), so producers
-    and consumers of DIFFERENT queues make progress simultaneously —
-    the concurrent topology's four legs genuinely overlap — while all
-    queue-state mutations stay serialized under one lock."""
+    and consumers of DIFFERENT queues make progress simultaneously, while
+    all queue-state mutations stay serialized under one lock. Frames from
+    two connections are therefore not ordered: a producer that needs its
+    PUBs queued before anyone else connects waits for a COUNT reply."""
 
     DEFAULT_QUEUE = "main"
 
@@ -196,8 +197,8 @@ def _frame(verb: str, queue: str) -> str:
 
 
 def _publish_partition(port: int, queue: str = MiniBroker.DEFAULT_QUEUE):
-    """foreachPartition closure: one producer connection per partition
-    (serialized by the broker's sequential accept), PUB every wire line."""
+    """foreachPartition closure: one producer connection per partition,
+    PUB every wire line."""
     pub = _frame("PUB", queue)
     count = _frame("COUNT", queue)
 

@@ -8,13 +8,14 @@ the upstream stage's file sink is the downstream stage's file source, which
 is exactly the durable-queue contract (at-least-once delivery, consumer
 offset tracking via the sink's _spark_metadata + the reader's checkpoint).
 
-In production the four queries run continuously and concurrently —
-micro-batches pipeline through the handoff dirs (or Kafka topics, swapping
-format('parquet') for format('kafka')); each stage checkpoints and scales
-its shuffle partitions independently, matching the reference's
-process-per-stage deployment and restart isolation. The test harness runs
-them sequentially with availableNow, which drains the same dataflow to
-quiescence.
+The four stages are defined once (``_apm_stages``) and run on one of two
+schedules. For live input, ``start_apm_topology`` starts them as four
+concurrent queries: micro-batches pipeline through the handoff dirs (or
+Kafka topics, swapping format('parquet') for format('kafka')), and each
+stage checkpoints and scales its shuffle partitions independently,
+matching the reference's process-per-stage deployment and restart
+isolation. For bounded input, ``run_apm_topology`` drains them one after
+another with availableNow, which brings the same dataflow to quiescence.
 
 Stage map (reference file -> here):
   * stream_parse_transactions.js -> tx_stream (sources/tx.py projection)
@@ -29,7 +30,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from apmbackend_spark.operators.alerts import AlertConfig
-from apmbackend_spark.operators.zscore import fs_schema
+from apmbackend_spark.operators.zscore import fs_schema, st_from_window_stats
 from apmbackend_spark.streaming.pipeline import tx_stream, window_stats_stream
 from apmbackend_spark.streaming.stateful import alerts_stateful, zscore_stateful
 
@@ -44,17 +45,93 @@ ST_HANDOFF_SCHEMA = (
 )
 
 
-def _run_stage(
-    stream_df, path: str, ckpt: str, timeout_s: int, fmt: str = "parquet"
-) -> None:
-    q = (
+APM_STAGES = ("tx", "st", "fs", "al")
+
+
+def _apm_stages(
+    spark: SparkSession,
+    events_dir: str,
+    src: dict[str, str],
+    *,
+    lags,
+    threshold: float,
+    influence: float,
+    alert_cfg: AlertConfig,
+    watermark: str,
+    endts_before: int | None,
+    wire: bool,
+) -> list[tuple[str, "DataFrame", str]]:
+    """The four APM stages, defined once for every runner: a list of
+    (name, streaming DataFrame, sink format) in stage order.
+
+    ``src`` maps each downstream stage ('st', 'fs', 'al') to the directory
+    it reads: the upstream stage's sink for the file topology, a broker
+    spool for the broker gate. Those directories are created here, so a
+    consumer may start before its producer has written anything.
+    ``endts_before`` bounds stage 1 to tx with endts below it. ``wire=True``
+    runs the tx, st and fs handoffs through the reference's queue wire
+    protocol (sources/queue.py): the producer encodes its records to
+    pipe-delimited entry lines sunk as text, the consumer decodes the line
+    stream. The codecs are pure column projections, so the stage plans are
+    the same apart from the encode/decode expressions riding sink and
+    source."""
+    import os
+
+    from apmbackend_spark.sources import queue as qu
+
+    for d in src.values():
+        os.makedirs(d, exist_ok=True)
+
+    def read(stage: str, schema: str, decode) -> "DataFrame":
+        if wire:
+            return decode(spark.readStream.text(src[stage]))
+        return spark.readStream.schema(schema).parquet(src[stage])
+
+    # stage 1 — parse: raw events -> normalized tx records
+    tx = tx_stream(spark, events_dir)
+    if endts_before is not None:
+        tx = tx.where(F.col("endts") < int(endts_before))
+    tx = tx.select(
+        "logid", "server", "service", "acctnum",
+        "startts", "endts", "elapsed", "toplevel",
+    )
+    # stage 2 — calc_stats: sliding-window st records (watermark-closed only)
+    tx_in = read("st", TX_HANDOFF_SCHEMA, qu.wire_to_tx).withColumn(
+        "endtime", F.timestamp_millis(F.col("endts"))
+    )
+    st = st_from_window_stats(window_stats_stream(tx_in, watermark=watermark))
+    # stage 3 — calc_z_score: per-key recursive detector with store-backed
+    # history
+    fs = zscore_stateful(
+        read("fs", ST_HANDOFF_SCHEMA, qu.wire_to_st),
+        lags=lags, threshold=threshold, influence=influence,
+    )
+    # stage 4 — process_alerts: predicates + debounce + cooldown
+    al = alerts_stateful(read("al", fs_schema(), qu.wire_to_fs), alert_cfg)
+    if wire:
+        # the st wire form is lossless here: the stat metrics are
+        # round(.., 0) integer-valued and tpm is a <=2-decimal decimal, so
+        # nf's fixed-point rendering parses back to the identical doubles
+        tx, st, fs = qu.tx_to_wire(tx), qu.st_to_wire(st), qu.fs_to_wire(fs)
+    fmt = "text" if wire else "parquet"
+    return [
+        ("tx", tx, fmt), ("st", st, fmt), ("fs", fs, fmt), ("al", al, "parquet")
+    ]
+
+
+def _writer(stream_df, fmt: str, path: str, ckpt: str):
+    return (
         stream_df.writeStream.format(fmt)
         .option("path", path)
         .option("checkpointLocation", ckpt)
         .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
     )
+
+
+def _run_stage(
+    stream_df, path: str, ckpt: str, timeout_s: int, fmt: str = "parquet"
+) -> None:
+    q = _writer(stream_df, fmt, path, ckpt).trigger(availableNow=True).start()
     finished = q.awaitTermination(timeout_s)
     if not finished:
         # A timed-out stage has a half-written handoff dir; the next stage
@@ -63,6 +140,26 @@ def _run_stage(
         raise TimeoutError(
             f"streaming stage writing {path!r} did not drain within {timeout_s}s"
         )
+
+
+def _file_topology(
+    spark: SparkSession,
+    events_dir: str,
+    work_dir: str,
+    alert_cfg: AlertConfig | None,
+    **stage_kw,
+):
+    """The sink directory per stage, and the stages reading each other's
+    sinks: the file-handoff topology both schedules run."""
+    dirs = {name: f"{work_dir}/{name}" for name in APM_STAGES}
+    stages = _apm_stages(
+        spark,
+        events_dir,
+        {down: dirs[up] for up, down in zip(APM_STAGES, APM_STAGES[1:])},
+        alert_cfg=alert_cfg or AlertConfig(),
+        **stage_kw,
+    )
+    return dirs, stages
 
 
 def run_apm_topology(
@@ -78,86 +175,29 @@ def run_apm_topology(
     endts_before: int | None = None,
     wire: bool = False,
 ) -> dict[str, str]:
-    """Drain the full four-stage pipeline over everything in ``events_dir``;
-    returns the handoff directory per stage ('tx', 'st', 'fs', 'al').
+    """Drain the full four-stage pipeline over everything in ``events_dir``,
+    one stage at a time with availableNow: the bounded-input schedule.
+    Returns the handoff directory per stage ('tx', 'st', 'fs', 'al').
     ``endts_before`` optionally bounds stage 1 to tx with endts below it (a
     stateless stream filter — used by the graded gate to keep the drained
     volume span-bounded).
 
     ``wire=True`` runs every inter-stage handoff THROUGH the reference's
-    queue wire protocol (sources/queue.py): each producer stage encodes its
-    records to pipe-delimited entry lines and sinks them as text, and the
-    consumer stage decodes the line stream — exactly the
+    queue wire protocol (see ``_apm_stages``) — exactly the
     transactions -> stats -> z_score -> db_insert queue legs of the
     reference's 4-process topology (config/apm_config.json:87-114), with
-    the parquet handoff directory standing in for the broker. The codecs
-    are pure column projections, so the streaming plans are unchanged
-    apart from the encode/decode expressions riding the sink/source."""
-    from apmbackend_spark.sources import queue as qu
-
-    cfg = alert_cfg or AlertConfig()
-    dirs = {name: f"{work_dir}/{name}" for name in ("tx", "st", "fs", "al")}
-    fmt = "text" if wire else "parquet"
-
-    # stage 1 — parse: raw events -> normalized tx records
-    tx = tx_stream(spark, events_dir)
-    if endts_before is not None:
-        tx = tx.where(F.col("endts") < int(endts_before))
-    tx = tx.select(
-        "logid", "server", "service", "acctnum",
-        "startts", "endts", "elapsed", "toplevel",
+    the handoff directory standing in for the broker."""
+    dirs, stages = _file_topology(
+        spark, events_dir, work_dir, alert_cfg, lags=lags,
+        threshold=threshold, influence=influence, watermark=watermark,
+        endts_before=endts_before, wire=wire,
     )
-    if wire:
-        tx = qu.tx_to_wire(tx)
-    _run_stage(tx, dirs["tx"], f"{work_dir}/ckpt_tx", timeout_s, fmt)
-
-    # stage 2 — calc_stats: sliding-window st records (watermark-closed only)
-    if wire:
-        tx_in = qu.wire_to_tx(spark.readStream.text(dirs["tx"]))
-    else:
-        tx_in = spark.readStream.schema(TX_HANDOFF_SCHEMA).parquet(dirs["tx"])
-    tx_in = tx_in.withColumn("endtime", F.timestamp_millis(F.col("endts")))
-    st = window_stats_stream(tx_in, watermark=watermark).select(
-        F.col("win_start").alias("timestamp"),
-        "server",
-        "service",
-        "tpm",
-        F.round(F.col("avg_ms"), 0).alias("average"),
-        F.round(F.col("p75"), 0).alias("per75"),
-        F.round(F.col("p95"), 0).alias("per95"),
-    )
-    # the st wire form is lossless here: the stat metrics are round(.., 0)
-    # integer-valued and tpm is a <=2-decimal decimal, so nf's fixed-point
-    # rendering parses back to the identical doubles
-    if wire:
-        st = qu.st_to_wire(st)
-    _run_stage(st, dirs["st"], f"{work_dir}/ckpt_st", timeout_s, fmt)
-
-    # stage 3 — calc_z_score: per-key recursive detector with store-backed
-    # history
-    if wire:
-        st_in = qu.wire_to_st(spark.readStream.text(dirs["st"]))
-    else:
-        st_in = spark.readStream.schema(ST_HANDOFF_SCHEMA).parquet(dirs["st"])
-    fs = zscore_stateful(
-        st_in, lags=lags, threshold=threshold, influence=influence
-    )
-    if wire:
-        fs = qu.fs_to_wire(fs)
-    _run_stage(fs, dirs["fs"], f"{work_dir}/ckpt_fs", timeout_s, fmt)
-
-    # stage 4 — process_alerts: predicates + debounce + cooldown
-    if wire:
-        fs_in = qu.wire_to_fs(spark.readStream.text(dirs["fs"]))
-    else:
-        fs_in = spark.readStream.schema(fs_schema()).parquet(dirs["fs"])
-    al = alerts_stateful(fs_in, cfg)
-    _run_stage(al, dirs["al"], f"{work_dir}/ckpt_al", timeout_s)
-
+    for name, df, fmt in stages:
+        _run_stage(df, dirs[name], f"{work_dir}/ckpt_{name}", timeout_s, fmt)
     return dirs
 
 
-def run_apm_topology_concurrent(
+def start_apm_topology(
     spark: SparkSession,
     events_dir: str,
     work_dir: str,
@@ -166,109 +206,37 @@ def run_apm_topology_concurrent(
     influence: float = 0.1,
     alert_cfg: AlertConfig | None = None,
     watermark: str = "60 seconds",
-    timeout_s: int = 300,
-    endts_before: int | None = None,
-) -> dict[str, str]:
-    """The four stages as SIMULTANEOUSLY RUNNING streaming queries — the
-    reference's process-per-stage deployment shape actually scheduled
-    concurrently (micro-batches pipeline through the handoff dirs while
-    upstream still produces), instead of the stage-by-stage availableNow
-    drain of ``run_apm_topology``. Stage 1 runs availableNow; stages 2-4
-    run short processingTime micro-batches against the LIVE upstream sink
-    directories, and the tail is flushed deterministically with
-    ``processAllAvailable`` in stage order once upstream terminates.
+) -> tuple[dict, dict[str, str]]:
+    """Start the same four stages as live streaming queries — the
+    reference's process-per-stage deployment, each stage consuming its
+    upstream's sink while upstream still produces — and return
+    ``(queries, dirs)``, both keyed by stage name. Nothing is drained:
+    the caller owns the queries (flush them in stage order with
+    ``processAllAvailable``, then stop them). Every query runs Spark's
+    default trigger, the next micro-batch starting as soon as the last
+    one ends.
 
-    Results are IDENTICAL to the sequential drain (asserted by frame
-    equality in pytest): append emission is watermark-driven — a pure
-    function of the data, not of batching — upstream sinks emit windows
-    in nondecreasing event-time order per key (so the stateful stages'
-    cross-batch state advances monotonically), and the file sink/source
-    handoff is exactly-once via the sink's _spark_metadata log."""
-    import os
-
-    cfg = alert_cfg or AlertConfig()
-    dirs = {name: f"{work_dir}/{name}" for name in ("tx", "st", "fs", "al")}
-    for p in dirs.values():
-        os.makedirs(p, exist_ok=True)
-
-    # stage 1 — parse (availableNow: terminates when the fixture is drained)
-    tx = tx_stream(spark, events_dir)
-    if endts_before is not None:
-        tx = tx.where(F.col("endts") < int(endts_before))
-    tx = tx.select(
-        "logid", "server", "service", "acctnum",
-        "startts", "endts", "elapsed", "toplevel",
+    A flushed run equals ``run_apm_topology``'s drain frame for frame:
+    append emission is watermark-driven — a pure function of the data,
+    not of batching — upstream sinks emit windows in nondecreasing
+    event-time order per key, and the file sink/source handoff is
+    exactly-once via the sink's _spark_metadata log."""
+    dirs, stages = _file_topology(
+        spark, events_dir, work_dir, alert_cfg, lags=lags,
+        threshold=threshold, influence=influence, watermark=watermark,
+        endts_before=None, wire=False,
     )
-    q1 = (
-        tx.writeStream.format("parquet")
-        .option("path", dirs["tx"])
-        .option("checkpointLocation", f"{work_dir}/ckpt_tx")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-
-    # stages 2-4 — started IMMEDIATELY, consuming the live sink dirs
-    tx_in = spark.readStream.schema(TX_HANDOFF_SCHEMA).parquet(
-        dirs["tx"]
-    ).withColumn("endtime", F.timestamp_millis(F.col("endts")))
-    st = window_stats_stream(tx_in, watermark=watermark).select(
-        F.col("win_start").alias("timestamp"),
-        "server",
-        "service",
-        "tpm",
-        F.round(F.col("avg_ms"), 0).alias("average"),
-        F.round(F.col("p75"), 0).alias("per75"),
-        F.round(F.col("p95"), 0).alias("per95"),
-    )
-    q2 = (
-        st.writeStream.format("parquet")
-        .option("path", dirs["st"])
-        .option("checkpointLocation", f"{work_dir}/ckpt_st")
-        .outputMode("append")
-        .trigger(processingTime="300 milliseconds")
-        .start()
-    )
-    st_in = spark.readStream.schema(ST_HANDOFF_SCHEMA).parquet(dirs["st"])
-    fs = zscore_stateful(
-        st_in, lags=lags, threshold=threshold, influence=influence
-    )
-    q3 = (
-        fs.writeStream.format("parquet")
-        .option("path", dirs["fs"])
-        .option("checkpointLocation", f"{work_dir}/ckpt_fs")
-        .outputMode("append")
-        .trigger(processingTime="300 milliseconds")
-        .start()
-    )
-    fs_in = spark.readStream.schema(fs_schema()).parquet(dirs["fs"])
-    al = alerts_stateful(fs_in, cfg)
-    q4 = (
-        al.writeStream.format("parquet")
-        .option("path", dirs["al"])
-        .option("checkpointLocation", f"{work_dir}/ckpt_al")
-        .outputMode("append")
-        .trigger(processingTime="300 milliseconds")
-        .start()
-    )
-
+    queries = {}
     try:
-        if not q1.awaitTermination(timeout_s):
-            raise TimeoutError("concurrent topology: stage 1 did not drain")
-        # deterministic tail flush, in stage order: each stage consumes
-        # everything its (now finished) upstream wrote, then stops
-        for q in (q2, q3, q4):
-            q.processAllAvailable()
+        for name, df, fmt in stages:
+            queries[name] = _writer(
+                df, fmt, dirs[name], f"{work_dir}/ckpt_{name}"
+            ).start()
+    except BaseException:
+        for q in queries.values():
             q.stop()
-            if not q.awaitTermination(timeout_s):
-                raise TimeoutError(
-                    "concurrent topology: a stage did not stop cleanly"
-                )
-    finally:
-        for q in (q1, q2, q3, q4):
-            if q.isActive:
-                q.stop()
-    return dirs
+        raise
+    return queries, dirs
 
 
 def stream_topology_gate(
@@ -327,22 +295,17 @@ def stream_topology_gate(
         # one cheap batch scan for the slice bound (min endts + slice)
         lo = load_tx(spark, sf_dir).agg(F.min("endts")).collect()[0][0]
         endts_before = int(lo) + int(slice_ms)
-    # The gate's drained volume is span-bounded (|keys| x slice hours), so
-    # a 32-partition session default (local[32]) means mostly-empty state
-    # store instances per stateful operator per micro-batch — measured ~2x
-    # the gate's wall time in pure overhead at sf0.1. Size the stream's
-    # shuffle to the bounded key volume for the drain, restore after.
-    # (Partitioning never changes results — every stage is key-hashed.)
+    # The gate's drained volume is span-bounded (|keys| x slice hours), but
+    # the session's shuffle default scales with the session, not the data:
+    # one partition per CPU under get_spark, 200 in a vanilla session. Each
+    # partition is a state store instance per stateful operator per
+    # micro-batch, mostly empty at this volume, so pin the shuffle to the
+    # bounded key volume for the drain and restore it after. (Partitioning
+    # never changes results — every stage is key-hashed.)
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
     try:
-        # the concurrent schedule (stages 2-4 live while stage 1 drains) is
-        # parity-pinned byte-identical to the sequential drain in pytest;
-        # the wire-threaded variant keeps the stage-by-stage drain (its
-        # handoffs are text codecs, not the concurrent runner's parquet)
-        kwargs = {"wire": True} if wire else {}
-        runner = run_apm_topology if wire else run_apm_topology_concurrent
-        dirs = runner(
+        dirs = run_apm_topology(
             spark,
             ev_dir,
             os.path.join(work, "topo"),
@@ -351,7 +314,7 @@ def stream_topology_gate(
             influence=influence,
             watermark=watermark,
             endts_before=endts_before,
-            **kwargs,
+            wire=wire,
         )
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
@@ -1154,16 +1117,6 @@ def stream_nearest_gate(
 TOPO_BROKER_SLICE_MS = 12 * 3600 * 1000
 
 
-def _py_hash64(s: str) -> int:
-    """Pure-Python twin of functions.text.hash64 — see text.py:py_hash64
-    (shared with sources/broker.py's redelivery gate). Evaluating the
-    content-keyed crash predicate per streamed payload keeps the harness
-    free of data-proportional driver state."""
-    from apmbackend_spark.functions.text import py_hash64
-
-    return py_hash64(s)
-
-
 def _broker_hop(
     spark, brk, queue: str, src_dir: str, spool_dir: str, lose_if
 ) -> None:
@@ -1230,132 +1183,6 @@ class _BrokerHandle:
 
     def close(self) -> None:
         self.broker.close()
-
-
-class _ChunkLeg:
-    """One queue leg of the CONCURRENT broker topology, run in its own
-    thread: for every upstream wire chunk handed to ``feed`` it publishes
-    the chunk executor-side, runs the crashing consumer session (admitted
-    payloads spooled+acked atomically, payloads the content-keyed
-    ``lose_if`` predicate condemns neither — the mid-stream crash), runs
-    the RECOVERY session (the broker redelivers exactly the unacked set),
-    asserts the queue settles to PEND 0, and atomically renames the
-    recovered chunk (admitted + redelivered, one file) into ``spool_dir``
-    — where the downstream stage's LIVE streaming query picks it up while
-    this leg's producer is still publishing later chunks. Chunks are
-    event-time range slices, so handing each chunk downstream only after
-    ITS redelivery settles adds zero event-time disorder: the downstream
-    watermark can never pass a crash-lost payload before it arrives, which
-    is what makes the concurrent schedule's frames byte-identical to the
-    sequential drain's. Each chunk cycle settles its queue before the next
-    begins (amqp prefetch=1 per leg); DIFFERENT queues' legs overlap
-    freely on the thread-per-connection broker."""
-
-    _DONE = object()
-
-    def __init__(
-        self, spark, brk: "_BrokerHandle", queue: str, spool_dir: str,
-        lose_if, staging_dir: str,
-    ) -> None:
-        import os
-        import queue as pyq
-        import threading
-
-        self.spark = spark
-        self.brk = brk
-        self.queue = queue
-        self.spool_dir = spool_dir
-        self.lose_if = lose_if
-        self.staging = staging_dir
-        os.makedirs(spool_dir, exist_ok=True)
-        os.makedirs(staging_dir, exist_ok=True)
-        self._q: "pyq.Queue" = pyq.Queue()
-        self._published = 0
-        self.chunks = 0
-        self.err: BaseException | None = None
-        self._thread = threading.Thread(target=self._run, daemon=True)
-        self._thread.start()
-
-    def feed(self, chunk_path: str) -> None:
-        if self.err is not None:
-            raise RuntimeError(
-                f"{self.queue} leg already failed"
-            ) from self.err
-        self._q.put(chunk_path)
-
-    def finish(self, timeout_s: int) -> None:
-        """Signal end-of-stream, drain remaining chunks, re-raise any
-        leg failure."""
-        self._q.put(self._DONE)
-        self._thread.join(timeout_s)
-        if self._thread.is_alive():
-            raise TimeoutError(
-                f"{self.queue} leg did not drain within {timeout_s}s"
-            )
-        if self.err is not None:
-            raise self.err
-
-    def _run(self) -> None:
-        try:
-            while True:
-                item = self._q.get()
-                if item is self._DONE:
-                    return
-                self._cycle(item)
-        except BaseException as ex:  # noqa: BLE001 — surfaced by finish()
-            self.err = ex
-
-    def _cycle(self, chunk_path: str) -> None:
-        import os
-
-        idx = self.chunks
-        wire = self.spark.read.text(chunk_path)
-        wire.foreachPartition(self.brk._publish_partition_fn(self.queue))
-        n_lines = wire.count()
-        self._published += n_lines
-        n_pub = self.brk.broker.message_count(self.queue)
-        if n_pub != self._published:
-            raise RuntimeError(
-                f"{self.queue}: broker holds {n_pub} published messages, "
-                f"legs published {self._published} (double-publish?)"
-            )
-        s1 = os.path.join(self.staging, f"{self.queue}-{idx:05d}-s1.txt")
-        s2 = os.path.join(self.staging, f"{self.queue}-{idx:05d}-s2.txt")
-        n1, pend1 = self.brk.consume(
-            self.queue, s1,
-            ack_if=lambda p: not self.lose_if(p),
-            spool_acked_only=True,
-        )
-        if n1 != n_lines:
-            # the previous cycle settled to PEND 0, so session 1 must see
-            # exactly this chunk
-            raise RuntimeError(
-                f"{self.queue}: chunk {idx}: session 1 saw {n1} of "
-                f"{n_lines} published messages"
-            )
-        n2, pend2 = self.brk.consume(self.queue, s2)
-        if pend1 != n2:
-            raise RuntimeError(
-                f"{self.queue}: chunk {idx}: redelivery mismatch: "
-                f"{pend1} unacked, {n2} redelivered"
-            )
-        if pend2 != 0:
-            raise RuntimeError(
-                f"{self.queue}: chunk {idx}: broker holds {pend2} unacked "
-                "after recovery session"
-            )
-        # one atomic handoff file per settled chunk: admitted + recovered
-        tmp = os.path.join(self.staging, f"{self.queue}-{idx:05d}.txt")
-        with open(tmp, "w", encoding="utf-8") as out:
-            for part in (s1, s2):
-                with open(part, "r", encoding="utf-8") as fh:
-                    out.write(fh.read())
-        os.rename(
-            tmp, os.path.join(self.spool_dir, f"chunk-{idx:05d}.txt")
-        )
-        os.remove(s1)
-        os.remove(s2)
-        self.chunks = idx + 1
 
 
 # Alert config for the broker-composed topology's process_alerts stage:
@@ -1426,6 +1253,7 @@ def topology_broker_gate(
     import shutil
     import tempfile
 
+    from apmbackend_spark.functions.text import py_hash64
     from apmbackend_spark.sources import queue as qu
     from apmbackend_spark.sources.tx import load_tx
 
@@ -1441,100 +1269,54 @@ def topology_broker_gate(
     lo = load_tx(spark, sf_dir).agg(F.min("endts")).collect()[0][0]
     endts_before = int(lo) + int(slice_ms)
 
+    spool = {name: os.path.join(work, f"{name}_consumed") for name in APM_STAGES}
+    stages = _apm_stages(
+        spark,
+        ev_dir,
+        {down: spool[up] for up, down in zip(APM_STAGES, APM_STAGES[1:])},
+        lags=lags,
+        threshold=threshold,
+        influence=influence,
+        alert_cfg=cfg,
+        watermark=watermark,
+        endts_before=endts_before,
+        wire=True,
+    )
+    # each producer stage's queue and its crash rule, a content-keyed hash
+    # predicate evaluated per payload: the transactions hop hashes the wire
+    # logid (field 3 of tx|server|service|logid|... — same rule as
+    # queue_roundtrip); st lines are unique per (timestamp, server,
+    # service) and fs lines per (timestamp, server, service, lag), so
+    # those hops hash the whole line
+    mod, rem = int(qu._REPLAY_MOD), int(qu._REPLAY_REM)
+    hops = {
+        "tx": ("transactions", lambda p: py_hash64(p.split("|")[3]) % mod == rem),
+        "st": ("stats", lambda p: py_hash64(p) % 10 == 3),
+        "fs": ("z_score", lambda p: py_hash64(p) % 10 == 5),
+    }
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
     brk = _BrokerHandle()
     try:
-        # stage 1 — parse, wire-encoded (the transactions-queue producer)
-        tx = (
-            tx_stream(spark, ev_dir)
-            .where(F.col("endts") < endts_before)
-            .select(
-                "logid", "server", "service", "acctnum",
-                "startts", "endts", "elapsed", "toplevel",
+        # each stage drains its recovered upstream spool, then its output
+        # rides its queue through an independent crash/recovery
+        for name, df, fmt in stages:
+            out = os.path.join(work, f"{name}_wire" if name in hops else name)
+            _run_stage(
+                df, out, os.path.join(work, f"ckpt_{name}"), timeout_s, fmt
             )
-        )
-        tx_dir = os.path.join(work, "tx_wire")
-        _run_stage(
-            qu.tx_to_wire(tx), tx_dir,
-            os.path.join(work, "ckpt_tx"), timeout_s, "text",
-        )
-
-        # transactions-queue hop: crash on the wire-logid hash rule
-        # (field 3 of tx|server|service|logid|... — same rule as
-        # queue_roundtrip, evaluated per payload)
-        mod, rem = int(qu._REPLAY_MOD), int(qu._REPLAY_REM)
-        tx_spool = os.path.join(work, "tx_consumed")
-        _broker_hop(
-            spark, brk, "transactions", tx_dir, tx_spool,
-            lambda p: _py_hash64(p.split("|")[3]) % mod == rem,
-        )
-
-        # stage 2 — calc_stats over the RECOVERED transactions spool,
-        # produced as st WIRE lines (the stats-queue producer)
-        tx_in = qu.wire_to_tx(spark.readStream.text(tx_spool)).withColumn(
-            "endtime", F.timestamp_millis(F.col("endts"))
-        )
-        st = window_stats_stream(tx_in, watermark=watermark).select(
-            F.col("win_start").alias("timestamp"),
-            "server",
-            "service",
-            "tpm",
-            F.round(F.col("avg_ms"), 0).alias("average"),
-            F.round(F.col("p75"), 0).alias("per75"),
-            F.round(F.col("p95"), 0).alias("per95"),
-        )
-        st_dir = os.path.join(work, "st_wire")
-        _run_stage(
-            qu.st_to_wire(st), st_dir,
-            os.path.join(work, "ckpt_st"), timeout_s, "text",
-        )
-
-        # stats-queue hop: SECOND independent crash/recovery, its own
-        # content-keyed rule (whole-line hash — st lines are unique per
-        # (timestamp, server, service))
-        st_spool = os.path.join(work, "st_consumed")
-        _broker_hop(
-            spark, brk, "stats", st_dir, st_spool,
-            lambda p: _py_hash64(p) % 10 == 3,
-        )
-
-        # stage 3 — calc_z_score over the recovered stats spool, produced
-        # as fs WIRE lines (the z_score-queue producer)
-        st_in = qu.wire_to_st(spark.readStream.text(st_spool))
-        fs = zscore_stateful(
-            st_in, lags=lags, threshold=threshold, influence=influence
-        )
-        fs_dir = os.path.join(work, "fs_wire")
-        _run_stage(
-            qu.fs_to_wire(fs), fs_dir,
-            os.path.join(work, "ckpt_fs"), timeout_s, "text",
-        )
-
-        # z_score-queue hop: THIRD cycle (fs lines are unique per
-        # (timestamp, server, service, lag))
-        fs_spool = os.path.join(work, "fs_consumed")
-        _broker_hop(
-            spark, brk, "z_score", fs_dir, fs_spool,
-            lambda p: _py_hash64(p) % 10 == 5,
-        )
-
-        # stage 4 — process_alerts over the recovered fs spool
-        al = alerts_stateful(
-            qu.wire_to_fs(spark.readStream.text(fs_spool)), cfg
-        )
-        al_dir = os.path.join(work, "al")
-        _run_stage(al, al_dir, os.path.join(work, "ckpt_al"), timeout_s)
+            if name in hops:
+                queue, lose_if = hops[name]
+                _broker_hop(spark, brk, queue, out, spool[name], lose_if)
 
         al_wire_dir = os.path.join(work, "al_wire")
-        _alert_wrap(spark, al_dir, fs_spool, al_wire_dir)
+        _alert_wrap(spark, os.path.join(work, "al"), spool["fs"], al_wire_dir)
 
         # db_insert-queue hop: FOURTH cycle (al lines are unique per
         # (alerttimestamp, server, service, lag-in-entry))
-        al_spool = os.path.join(work, "al_consumed")
         _broker_hop(
-            spark, brk, "db_insert", al_wire_dir, al_spool,
-            lambda p: _py_hash64(p) % 10 == 1,
+            spark, brk, "db_insert", al_wire_dir, spool["al"],
+            lambda p: py_hash64(p) % 10 == 1,
         )
     finally:
         brk.close()
@@ -1543,231 +1325,7 @@ def topology_broker_gate(
     # graded frame: the decoded db_insert spool, with lag + the triggering
     # metrics recovered FROM the embedded (escaped) entry — proving the
     # AlertEntry embedding carried real content through the fourth hop
-    return _decode_db_spool(spark, al_spool)
-
-
-def _chunk_feeder(leg: "_ChunkLeg", encode, order_col: str, nchunks: int,
-                  tmp_root: str, tag: str):
-    """foreachBatch sink for a queue-leg PRODUCER stage: wire-encode the
-    micro-batch range-partitioned on its event-time column (so the leg's
-    chunk sequence is event-time ordered — each part file is a contiguous
-    time slice) and hand each part file to the leg thread. The feed
-    returns immediately; the leg cycles the broker while this stage's
-    next micro-batch (and every other stage) keeps running."""
-    import glob
-    import os
-
-    def fn(bdf, bid: int) -> None:
-        if bdf.isEmpty():
-            return
-        out = os.path.join(tmp_root, f"{tag}_batch{bid}")
-        encode(bdf.repartitionByRange(nchunks, order_col)).write.mode(
-            "overwrite"
-        ).text(out)
-        for p in sorted(glob.glob(os.path.join(out, "part-*"))):
-            if os.path.getsize(p) > 0:
-                leg.feed(p)
-
-    return fn
-
-
-def topology_broker_concurrent_gate(
-    spark: SparkSession,
-    sf_dir: str,
-    lags=(60,),
-    threshold: float = 3.0,
-    influence: float = 0.1,
-    watermark: str = "60 seconds",
-    slice_ms: int = TOPO_BROKER_SLICE_MS,
-    shuffle_partitions: int = 8,
-    timeout_s: int = 300,
-    alert_cfg: AlertConfig | None = None,
-    nchunks: int = 2,
-    trigger: str = "100 milliseconds",
-) -> "DataFrame":
-    """``topology_broker_gate`` with the four queue legs SCHEDULED
-    CONCURRENTLY — the reference's deployment shape, where all four named
-    queues (transactions -> stats -> z_score -> db_insert,
-    apm_config.json:58-114) are live at once: every stage's consumer runs
-    WHILE its producer is still publishing. Semantics are unchanged — the
-    same codecs, the same content-keyed crash predicates, the same
-    per-queue crash + redelivery + settlement contract — only the
-    schedule differs, and pytest asserts the output frame is byte-
-    identical to the sequential drain's.
-
-    Scheduling: stage 1 drains availableNow, wire-encoding each
-    micro-batch into event-time range chunks that feed the transactions
-    leg's thread (_ChunkLeg: publish -> crash session -> REAL redelivery
-    -> settle -> atomic handoff). Stages 2-4 run as processingTime
-    streaming queries over the LIVE spool directories, each producer
-    feeding the next queue's leg the same way, so at steady state all
-    four queues carry traffic simultaneously on the thread-per-connection
-    broker. The tail is flushed deterministically in stage order
-    (processAllAvailable + leg finish), the same rule
-    run_apm_topology_concurrent proved for the file-handoff topology.
-
-    Why the frames are byte-identical: each chunk is handed downstream
-    only after its redelivery settles, and chunks are contiguous
-    event-time slices in nondecreasing order — so the crash-lost payloads
-    rejoin their own time slice before any downstream watermark can pass
-    it, and append emission remains a pure function of the data (the
-    run_apm_topology_concurrent argument, per queue leg)."""
-    import atexit
-    import glob as globmod
-    import os
-    import shutil
-    import tempfile
-
-    from apmbackend_spark.sources import queue as qu
-    from apmbackend_spark.sources.tx import load_tx
-
-    cfg = alert_cfg or TOPO_BROKER_ALERT_CFG
-    work = tempfile.mkdtemp(prefix="apm_topology_broker_conc_")
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
-    ev_dir = os.path.join(work, "events_src")
-    os.makedirs(ev_dir)
-    os.symlink(
-        os.path.join(sf_dir, "events.parquet"),
-        os.path.join(ev_dir, "events.parquet"),
-    )
-    lo = load_tx(spark, sf_dir).agg(F.min("endts")).collect()[0][0]
-    endts_before = int(lo) + int(slice_ms)
-
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    brk = _BrokerHandle()
-    staging = os.path.join(work, "staging")
-    tx_spool = os.path.join(work, "tx_consumed")
-    st_spool = os.path.join(work, "st_consumed")
-    fs_spool = os.path.join(work, "fs_consumed")
-    al_spool = os.path.join(work, "al_consumed")
-    al_dir = os.path.join(work, "al")
-    mod, rem = int(qu._REPLAY_MOD), int(qu._REPLAY_REM)
-    queries = []
-    try:
-        # the four legs' crash rules: identical to the sequential gate
-        leg_tx = _ChunkLeg(
-            spark, brk, "transactions", tx_spool,
-            lambda p: _py_hash64(p.split("|")[3]) % mod == rem, staging,
-        )
-        leg_st = _ChunkLeg(
-            spark, brk, "stats", st_spool,
-            lambda p: _py_hash64(p) % 10 == 3, staging,
-        )
-        leg_fs = _ChunkLeg(
-            spark, brk, "z_score", fs_spool,
-            lambda p: _py_hash64(p) % 10 == 5, staging,
-        )
-
-        # stage 1 — parse, producing the transactions queue's chunks
-        tx = (
-            tx_stream(spark, ev_dir)
-            .where(F.col("endts") < endts_before)
-            .select(
-                "logid", "server", "service", "acctnum",
-                "startts", "endts", "elapsed", "toplevel",
-            )
-        )
-        q1 = (
-            tx.writeStream.foreachBatch(
-                _chunk_feeder(leg_tx, qu.tx_to_wire, "endts", nchunks,
-                              work, "tx")
-            )
-            .option("checkpointLocation", os.path.join(work, "ckpt_tx"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        queries.append(q1)
-
-        # stage 2 — calc_stats LIVE over the recovering transactions spool
-        tx_in = qu.wire_to_tx(spark.readStream.text(tx_spool)).withColumn(
-            "endtime", F.timestamp_millis(F.col("endts"))
-        )
-        st = window_stats_stream(tx_in, watermark=watermark).select(
-            F.col("win_start").alias("timestamp"),
-            "server",
-            "service",
-            "tpm",
-            F.round(F.col("avg_ms"), 0).alias("average"),
-            F.round(F.col("p75"), 0).alias("per75"),
-            F.round(F.col("p95"), 0).alias("per95"),
-        )
-        q2 = (
-            st.writeStream.foreachBatch(
-                _chunk_feeder(leg_st, qu.st_to_wire, "timestamp", nchunks,
-                              work, "st")
-            )
-            .option("checkpointLocation", os.path.join(work, "ckpt_st"))
-            .trigger(processingTime=trigger)
-            .start()
-        )
-        queries.append(q2)
-
-        # stage 3 — calc_z_score LIVE over the recovering stats spool
-        fs = zscore_stateful(
-            qu.wire_to_st(spark.readStream.text(st_spool)),
-            lags=lags, threshold=threshold, influence=influence,
-        )
-        q3 = (
-            fs.writeStream.foreachBatch(
-                _chunk_feeder(leg_fs, qu.fs_to_wire, "timestamp", nchunks,
-                              work, "fs")
-            )
-            .option("checkpointLocation", os.path.join(work, "ckpt_fs"))
-            .trigger(processingTime=trigger)
-            .start()
-        )
-        queries.append(q3)
-
-        # stage 4 — process_alerts LIVE over the recovering z_score spool
-        al = alerts_stateful(
-            qu.wire_to_fs(spark.readStream.text(fs_spool)), cfg
-        )
-        q4 = (
-            al.writeStream.format("parquet")
-            .option("path", al_dir)
-            .option("checkpointLocation", os.path.join(work, "ckpt_al"))
-            .outputMode("append")
-            .trigger(processingTime=trigger)
-            .start()
-        )
-        queries.append(q4)
-
-        # deterministic tail flush, stage order: drain the producer, then
-        # settle its leg, then let the consumer stage catch up — exactly
-        # run_apm_topology_concurrent's rule with a leg barrier between
-        if not q1.awaitTermination(timeout_s):
-            raise TimeoutError("concurrent broker topology: stage 1 stuck")
-        leg_tx.finish(timeout_s)
-        for q, leg in ((q2, leg_st), (q3, leg_fs), (q4, None)):
-            q.processAllAvailable()
-            q.stop()
-            if not q.awaitTermination(timeout_s):
-                raise TimeoutError(
-                    "concurrent broker topology: a stage did not stop"
-                )
-            if leg is not None:
-                leg.finish(timeout_s)
-
-        # AlertEntry wrap + the db_insert leg over the al wire chunks
-        al_wire_dir = os.path.join(work, "al_wire")
-        _alert_wrap(spark, al_dir, fs_spool, al_wire_dir)
-        leg_db = _ChunkLeg(
-            spark, brk, "db_insert", al_spool,
-            lambda p: _py_hash64(p) % 10 == 1, staging,
-        )
-        for p in sorted(globmod.glob(os.path.join(al_wire_dir, "part-*"))):
-            if os.path.getsize(p) > 0:
-                leg_db.feed(p)
-        leg_db.finish(timeout_s)
-    finally:
-        for q in queries:
-            if q.isActive:
-                q.stop()
-        brk.close()
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-
-    return _decode_db_spool(spark, al_spool)
+    return _decode_db_spool(spark, spool["al"])
 
 
 def _alert_wrap(spark, al_dir: str, fs_spool: str, al_wire_dir: str) -> None:

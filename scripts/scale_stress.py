@@ -905,8 +905,7 @@ def main() -> None:
         # planner (O(1) config math — measured to PROVE volume
         # independence), the routed residual-PQ tuning curve (fixed
         # trained-artifact convention: pq_mod x K), and the broker
-        # topology under its new CONCURRENT schedule with the sequential
-        # drain alongside as the contrast.
+        # topology's sequential drain.
         print(
             f"tiling events+documents+embeddings {k}x into {scaled_dir} ...",
             flush=True,
@@ -937,10 +936,6 @@ def main() -> None:
             t.timed(
                 "ivfpq_l1probe_curve",
                 lambda: sim.ivfpq_l1probe_curve(embs, pq_mod=pqm),
-            )
-            t.timed(
-                "topology_broker_concurrent",
-                lambda: topo.topology_broker_concurrent_gate(spark, d),
             )
             t.timed(
                 "topology_broker_sequential",

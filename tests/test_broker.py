@@ -15,9 +15,15 @@ from apmbackend_spark.sources.broker import (
 
 def _pub(port, payloads):
     sock = socket.create_connection(("127.0.0.1", port), 10)
+    r = sock.makefile("r", encoding="utf-8", newline="\n")
     w = sock.makefile("w", encoding="utf-8", newline="\n")
     for p in payloads:
         w.write(f"PUB {p}\n")
+    # the broker serves each connection on its own thread, so wait for the
+    # COUNT reply: it proves every PUB is queued before a consumer connects
+    w.write("COUNT\n")
+    w.flush()
+    r.readline()
     w.write("QUIT\n")
     w.flush()
     sock.close()
@@ -173,9 +179,8 @@ def test_broker_named_queues_are_isolated(tmp_path):
         for p in ["t0", "t1"]:
             w.write(f"PUB@transactions {p}\n")
         w.write("PUB@stats s0\n")
-        # COUNT replies double as settlement barriers (the broker serves
-        # connections sequentially, so these prove the earlier _pub
-        # connection's frames are consumed too)
+        # COUNT replies double as settlement barriers (_pub waited for its
+        # own, so the default queue's frame is counted too)
         w.write("COUNT\n")
         w.write("COUNT@transactions\n")
         w.write("COUNT@stats\n")
@@ -202,13 +207,12 @@ def test_broker_named_queues_are_isolated(tmp_path):
 
 
 def test_py_hash64_matches_spark_hash64(spark):
-    # the broker hops' crash rules evaluate _py_hash64 per streamed
+    # the broker hops' crash rules evaluate py_hash64 per streamed
     # payload; it must agree with the JVM-side md5 hash on every payload
     # shape the wire carries (pipes, colons, '&'-escapes, unicode)
     from pyspark.sql import functions as F
 
-    from apmbackend_spark.functions.text import hash64
-    from apmbackend_spark.streaming.topology import _py_hash64
+    from apmbackend_spark.functions.text import hash64, py_hash64
 
     samples = [
         "tx|web-1|login|L123|9|1578400802669|1578400802869|200|svc",
@@ -223,4 +227,4 @@ def test_py_hash64_matches_spark_hash64(spark):
         for r in df.select("value", hash64(F.col("value")).alias("h")).collect()
     }
     for s in samples:
-        assert _py_hash64(s) == got[s], s
+        assert py_hash64(s) == got[s], s
