@@ -2688,7 +2688,7 @@ def _overlap(*thunks):
 
 def _pin_wide(df: DataFrame) -> DataFrame:
     """Checkpoint-pin a bytes-small but compute-heavy-downstream frame at
-    the cluster's parallelism (window_stats' REPARTITION_BY_NUM pin): AQE's
+    the cluster's parallelism (zscore_window's REPARTITION_BY_NUM pin): AQE's
     byte-based coalescing leaves these frames at ONE post-shuffle
     partition, and a localCheckpoint pins that layout — every downstream
     map-side fan-out (ADC candidate joins, Lloyd assigns) then runs
@@ -3181,7 +3181,7 @@ def _ivfpq_index(
             assigned = _assign_step(vecs, cent).select("vec_id", "list_id")
         # residual index artifact: (vec_id, residual vector) — used by
         # BOTH codebook training and encode, so materialize it once.
-        # Pinned-count repartition before the checkpoint (the window_stats
+        # Pinned-count repartition before the checkpoint (the zscore_window
         # REPARTITION_BY_NUM precedent): the frame is bytes-small after
         # AQE's byte-based coalescing (ONE post-shuffle partition at bench
         # scale), but every Lloyd round's candidate fan-out and the corpus

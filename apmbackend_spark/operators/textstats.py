@@ -1303,7 +1303,7 @@ def bpe_train(
 
 
 def _wide(df, *keys):
-    """Pinned-count keyed repartition (window_stats' REPARTITION_BY_NUM
+    """Pinned-count keyed repartition (zscore_window's REPARTITION_BY_NUM
     precedent): the distinct-pretoken vocab frame is bytes-small, so AQE
     coalesces it to ONE post-shuffle partition and localCheckpoint pins
     that layout — every selection job's pair explode/count and every

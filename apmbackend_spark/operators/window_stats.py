@@ -13,17 +13,20 @@ Semantics re-expressed Spark-first:
   * A5 exact p75/p95 with the midpoint rule (reference util_methods.js:112-142)
     over `sort_array(collect_list(elapsed))`.
 
-Physical plan at scale: a single hash-partitioned shuffle on
-(server, service, window) with map-side partial aggregation for count/sum;
-the collect_list for exact percentiles is bounded by per-key-per-window
-traffic, not data volume. AQE coalesces the post-shuffle partitions. For
-unbounded keys, `window_stats_approx` swaps A5 for `percentile_approx`
-(sketch-mergeable, fully map-side combinable).
+Batch and stream run this one definition: ``streaming/pipeline.py::
+window_stats_stream`` is `window_stats` over a watermarked stream.
+
+Physical plan: an Expand that gives each event its window/slide sliding
+windows, then a single hash-partitioned shuffle on (server, service,
+window) with map-side partial aggregation for count/sum; the collect_list
+for exact percentiles is bounded by per-key-per-window traffic, not data
+volume. At the benchmark's event densities this one-shuffle form beats a
+10 s bucket pre-rollup; SCALE.md records where the rollup would win.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from apmbackend_spark.functions.percentile import (
@@ -40,98 +43,14 @@ def window_stats(
     window: str = "300 seconds",
     slide: str = "10 seconds",
 ) -> DataFrame:
-    """One row per (server, service, sliding window) with tpm/avg/p75/p95.
-
-    Two-level rollup instead of the naive per-event sliding explode: events
-    aggregate FIRST into their 10 s tumbling bucket (map-side combinable —
-    the pre-shuffle stream is one partial row per (key, bucket) per mapper,
-    not window/slide copies of every event), then each bucket row fans out
-    to the window/slide windows containing it and merges. Percentiles stay
-    EXACT: the merged per-window multiset is identical to the naive plan's,
-    and sort_array(flatten(...)) normalizes away bucket-arrival order, so
-    the result is bit-identical. At 100x the event volume the explode cost
-    scales with distinct (key, bucket) groups — bounded by keys x time —
-    rather than with raw event count."""
-    minutes = _duration_minutes(window)
-    window_ms = _duration_ms(window)
-    slide_ms = _duration_ms(slide)
-    if window_ms % slide_ms:
-        # The bucket-partial rollup pre-aggregates at slide granularity, so a
-        # bucket must be fully contained in every window it feeds; a window
-        # that is not a whole number of slides would need sub-bucket splits
-        # and would silently under-cover.  Reference geometry (5 min / 10 s,
-        # stream_calc_stats.js:89-101) always divides evenly.
-        raise ValueError(
-            f"window ({window_ms} ms) must be a multiple of slide ({slide_ms} ms)"
-        )
-    n_win = window_ms // slide_ms
-    buckets = (
-        tx.groupBy(
-            "server", "service", F.expr(f"endts DIV {slide_ms}").alias("_bucket")
-        )
-        .agg(
-            F.count(F.lit(1)).alias("_bcnt"),
-            F.sum("elapsed").alias("_bsum"),
-            # unsorted: the post-merge sort_array normalizes, so a
-            # per-bucket pre-sort is pure wasted work
-            F.collect_list("elapsed").alias("_barr"),
-        )
-    )
-    # bucket b belongs to windows starting at (b-n+1..b) * slide
-    exploded = buckets.select(
-        "server",
-        "service",
-        "_bcnt",
-        "_bsum",
-        "_barr",
-        F.explode(
-            F.sequence(F.col("_bucket") - F.lit(int(n_win - 1)), F.col("_bucket"))
-        ).alias("_wb"),
-    )
-    # Pinned-count repartition on the merge keys: the per-window merge
-    # (flatten + exact-percentile sort over collect_list arrays) is
-    # compute-heavy but its input is bytes-small at bench scale, so AQE's
-    # byte-based coalescing would serialize it onto one reduce task. The
-    # explicit REPARTITION_BY_NUM exchange is exempt from coalescing and
-    # carries the same rows the ENSURE_REQUIREMENTS exchange would
-    # (partial agg cannot shrink collect_list payloads anyway).
-    n_parts = max(tx.sparkSession.sparkContext.defaultParallelism, 32)
-    agg = exploded.repartition(n_parts, "server", "service", "_wb").groupBy(
-        "server", "service", "_wb"
-    ).agg(
-        F.sum("_bcnt").alias("cnt"),
-        F.sum("_bsum").alias("_sum"),
-        F.sort_array(F.flatten(F.collect_list("_barr"))).alias("_arr"),
-    )
-    return agg.select(
-        "server",
-        "service",
-        (F.col("_wb") * F.lit(slide_ms)).cast("long").alias("win_start"),
-        "cnt",
-        (F.col("cnt") / F.lit(minutes)).alias("tpm"),
-        (F.col("_sum").cast("double") / F.col("cnt")).alias("avg_ms"),
-        midpoint_percentile(F.col("_arr"), 75).alias("p75"),
-        midpoint_percentile(F.col("_arr"), 95).alias("p95"),
-    )
-
-
-def window_stats_approx(
-    tx: DataFrame,
-    window: str = "300 seconds",
-    slide: str = "10 seconds",
-    time_col: str = "endtime",
-    accuracy: int = 10_000,
-) -> DataFrame:
-    """Perf path for unbounded groups: percentile_approx sketches merge
-    map-side, so no per-group array ever materializes."""
+    """One row per (server, service, sliding window) with tpm/avg/p75/p95."""
     minutes = _duration_minutes(window)
     return (
-        tx.groupBy("server", "service", F.window(F.col(time_col), window, slide))
+        tx.groupBy("server", "service", F.window(F.col("endtime"), window, slide))
         .agg(
             F.count(F.lit(1)).alias("cnt"),
-            F.avg("elapsed").alias("avg_ms"),
-            F.percentile_approx("elapsed", 0.75, accuracy).alias("p75"),
-            F.percentile_approx("elapsed", 0.95, accuracy).alias("p95"),
+            F.sum("elapsed").alias("_sum"),
+            F.sort_array(F.collect_list("elapsed")).alias("_arr"),
         )
         .select(
             "server",
@@ -139,9 +58,9 @@ def window_stats_approx(
             F.unix_millis("window.start").alias("win_start"),
             "cnt",
             (F.col("cnt") / F.lit(minutes)).alias("tpm"),
-            "avg_ms",
-            F.col("p75").cast("double").alias("p75"),
-            F.col("p95").cast("double").alias("p95"),
+            (F.col("_sum").cast("double") / F.col("cnt")).alias("avg_ms"),
+            midpoint_percentile(F.col("_arr"), 75).alias("p75"),
+            midpoint_percentile(F.col("_arr"), 95).alias("p95"),
         )
     )
 
@@ -178,8 +97,3 @@ def _duration_minutes(window: str) -> float:
     qty, unit = window.split()
     seconds = {"seconds": 1, "second": 1, "minutes": 60, "minute": 60}[unit] * int(qty)
     return seconds / 60.0
-
-
-def _duration_ms(window: str) -> int:
-    qty, unit = window.split()
-    return {"seconds": 1, "second": 1, "minutes": 60, "minute": 60}[unit] * int(qty) * 1000

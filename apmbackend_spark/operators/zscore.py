@@ -327,8 +327,7 @@ def zscore_window_chunked(
     lags = tuple(int(x) for x in lags)
     if max(lags) > int(chunk_intervals):
         # carry reaches exactly one chunk back; a longer lag would read a
-        # silently truncated history (guard convention: window_stats's
-        # window/slide divisibility ValueError)
+        # silently truncated history
         raise ValueError(
             f"max lag ({max(lags)}) must be <= chunk_intervals "
             f"({chunk_intervals}) so the carry covers the frame"

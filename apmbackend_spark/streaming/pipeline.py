@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from apmbackend_spark.functions.percentile import midpoint_percentile
+from apmbackend_spark.operators.window_stats import window_stats
 from apmbackend_spark.sources.tx import tx_from_events
 
 # Current-generation fixture shape; tx_stream peeks the actual files when
@@ -80,37 +80,16 @@ def window_stats_stream(
     slide: str = "10 seconds",
     watermark: str | None = "60 seconds",
 ) -> DataFrame:
-    """Watermarked sliding-window stats — the streaming twin of
-    operators/window_stats.py (same expressions, same output schema).
+    """Watermarked sliding-window stats: operators/window_stats.py's
+    `window_stats` over the stream, so batch and stream share one
+    definition and one output schema.
 
     ``watermark=None`` inherits the stream's existing watermark instead of
     setting one — required when chaining after another stateful operator
     (e.g. dedup_stream): Spark disallows redefining the watermark between
     stateful operators in one query."""
-    from apmbackend_spark.operators.window_stats import _duration_minutes
-
-    minutes = _duration_minutes(window)
-    arr = F.sort_array(F.collect_list("elapsed"))
-    src = tx.withWatermark("endtime", watermark) if watermark else tx
-    return (
-        src
-        .groupBy("server", "service", F.window(F.col("endtime"), window, slide))
-        .agg(
-            F.count(F.lit(1)).alias("cnt"),
-            F.sum("elapsed").alias("_sum"),
-            arr.alias("_arr"),
-        )
-        .select(
-            "server",
-            "service",
-            F.unix_millis("window.start").alias("win_start"),
-            F.unix_millis("window.end").alias("win_end"),
-            "cnt",
-            (F.col("cnt") / F.lit(minutes)).alias("tpm"),
-            (F.col("_sum").cast("double") / F.col("cnt")).alias("avg_ms"),
-            midpoint_percentile(F.col("_arr"), 75).alias("p75"),
-            midpoint_percentile(F.col("_arr"), 95).alias("p95"),
-        )
+    return window_stats(
+        tx.withWatermark("endtime", watermark) if watermark else tx, window, slide
     )
 
 
@@ -253,10 +232,12 @@ def run_available_now(
     checkpoint_dir: str,
     query_name: str = "apm_stream",
     output_mode: str = "append",
-    timeout_s: int = 300,
+    timeout_s: float = 300,
 ) -> DataFrame:
     """Drain everything currently available into a memory sink and return
-    the result as a DataFrame (test/dev harness)."""
+    the result as a DataFrame (test/dev harness). A query that has not
+    drained within ``timeout_s`` is stopped and raises TimeoutError rather
+    than returning a partial table."""
     q = (
         stream_df.writeStream.format("memory")
         .queryName(query_name)
@@ -265,9 +246,12 @@ def run_available_now(
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(timeout_s)
-    spark = stream_df.sparkSession
-    return spark.table(query_name)
+    if not q.awaitTermination(timeout_s):
+        q.stop()
+        raise TimeoutError(
+            f"streaming query {query_name!r} did not drain within {timeout_s}s"
+        )
+    return stream_df.sparkSession.table(query_name)
 
 
 def fanout_parquet_sink(

@@ -53,21 +53,20 @@ def test_q1_scan_prunes_columns(spark):
     assert any("LessThanOrEqual(l_shipdate" in l for l in p.splitlines())
 
 
-def test_window_stats_two_level_rollup(spark):
+def test_window_stats_one_sliding_shuffle(spark):
     from apmbackend_spark.operators.window_stats import window_stats
     from apmbackend_spark.sources.tx import load_tx
 
     import re
 
     p = plan(window_stats(load_tx(spark, SF_SMOKE)))
-    # two-level rollup: bucket groupBy + window merge groupBy, nothing more;
-    # the FIRST aggregate must partially aggregate map-side (the explode
-    # happens after it, on bucket rows, not on raw events). Only HASH
+    # the sliding form: an Expand gives each event its 30 windows, and one
+    # hash exchange on (server, service, window) feeds the merge. Only HASH
     # exchanges count — the ingest spread() is a round-robin widen, not a
     # semantic shuffle.
-    assert len(re.findall(r"hashpartitioning", p)) <= 2
-    assert "partial_count" in p or "ObjectHashAggregate" in p
-    assert "BatchEvalPython" not in p
+    assert len(re.findall(r"hashpartitioning", p)) == 1
+    assert "Expand" in p
+    assert "BatchEvalPython" not in p and "ArrowEvalPython" not in p
     # events scan reads only the needed columns
     read_schemas = [l for l in p.splitlines() if "ReadSchema" in l]
     assert read_schemas and all("props" not in l for l in read_schemas)
@@ -287,58 +286,6 @@ def test_kmeans_train_broadcasts_centroids_no_cartesian(spark):
     assert "CartesianProduct" not in p
     # the convergence counters stay scalar aggregates (no Python UDFs)
     assert "BatchEvalPython" not in p and "ArrowEvalPython" not in p
-
-
-def test_window_stats_approx_pins_to_exact(spark):
-    # the approx perf path must agree exactly on count-derived columns and
-    # within sketch tolerance on percentiles
-    from apmbackend_spark.operators.window_stats import (
-        window_stats,
-        window_stats_approx,
-    )
-    from apmbackend_spark.sources.tx import load_tx
-
-    tx = load_tx(spark, SF_SMOKE)
-    exact = {
-        (r["server"], r["service"], r["win_start"]): r
-        for r in window_stats(tx).collect()
-    }
-    approx = {
-        (r["server"], r["service"], r["win_start"]): r
-        for r in window_stats_approx(tx).collect()
-    }
-    assert set(exact) == set(approx)
-    for k, e in exact.items():
-        a = approx[k]
-        assert a["cnt"] == e["cnt"] and a["tpm"] == e["tpm"]
-        assert abs(a["avg_ms"] - e["avg_ms"]) < 1e-9
-        # percentile_approx returns an exact member of the multiset; the
-        # midpoint rule can fall between members — allow the gap
-        assert abs(a["p75"] - e["p75"]) <= max(50.0, 0.1 * e["p75"]), k
-        assert abs(a["p95"] - e["p95"]) <= max(50.0, 0.1 * e["p95"]), k
-    # and its plan must be sketch-mergeable: no collect_list anywhere
-    p = plan(window_stats_approx(tx))
-    assert "collect_list" not in p
-
-
-def test_window_stats_merge_exchange_pinned_against_aqe(spark):
-    """The per-window merge (flatten + exact-percentile sort over
-    collect_list payloads) is compute-heavy on a bytes-small input, so its
-    exchange must be the coalescing-exempt REPARTITION_BY_NUM form — an
-    ENSURE_REQUIREMENTS exchange here gets AQE-collapsed to one partition
-    and the whole merge runs serially."""
-    import __spark_entry__ as e
-
-    p = plan(e.queries()["window_stats"](spark, SF_SMOKE))
-    merge_exchanges = [
-        line
-        for line in p.splitlines()
-        if "hashpartitioning" in line and "_wb" in line
-    ]
-    assert merge_exchanges, "expected a window-bucket merge exchange"
-    assert any("REPARTITION_BY_NUM" in line for line in merge_exchanges), (
-        merge_exchanges
-    )
 
 
 def test_props_rollup_prunes_scan_and_stays_jvm(spark):

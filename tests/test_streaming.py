@@ -19,7 +19,9 @@ def tmpdir():
 
 
 def test_window_stats_stream_matches_batch(spark, tmpdir):
-    from apmbackend_spark.operators.window_stats import window_stats
+    from pyspark.sql import functions as F
+
+    from apmbackend_spark.operators.window_stats import WINDOW_MS, window_stats
     from apmbackend_spark.sources.tx import load_tx
     from apmbackend_spark.streaming.pipeline import (
         run_available_now,
@@ -32,23 +34,30 @@ def test_window_stats_stream_matches_batch(spark, tmpdir):
     got = run_available_now(
         window_stats_stream(tx), f"{tmpdir}/ckpt", query_name="ws_stream"
     ).collect()
-    assert len(got) > 0
 
-    batch = {
-        (r["server"], r["service"], r["win_start"]): r
-        for r in window_stats(load_tx(spark, SF_SMOKE)).collect()
-    }
-    # append mode emits only windows closed by the final watermark; every
-    # emitted window must match the batch result exactly.
-    assert len(got) <= len(batch)
-    for r in got:
-        b = batch[(r["server"], r["service"], r["win_start"])]
-        assert r["cnt"] == b["cnt"]
-        assert r["tpm"] == b["tpm"]
-        assert r["avg_ms"] == b["avg_ms"]
-        assert r["p75"] == b["p75"] and r["p95"] == b["p95"]
-    # and nearly all windows should have closed (watermark = max - 60 s)
-    assert len(got) >= 0.95 * len(batch)
+    # append mode emits exactly the windows closed by the final watermark
+    # (max endts - 60 s), each equal to the batch row
+    batch_tx = load_tx(spark, SF_SMOKE)
+    max_endts = batch_tx.agg(F.max("endts")).first()[0]
+    want = window_stats(batch_tx).where(
+        F.col("win_start") + WINDOW_MS <= max_endts - 60_000
+    ).collect()
+    assert len(want) > 0
+    assert sorted(tuple(r) for r in got) == sorted(tuple(r) for r in want)
+
+
+def test_run_available_now_times_out_loudly(spark, tmpdir):
+    # a drain that overruns its timeout must not hand back a partial table
+    from apmbackend_spark.streaming.pipeline import run_available_now, tx_stream
+
+    with pytest.raises(TimeoutError):
+        run_available_now(
+            tx_stream(spark, f"{SF_SMOKE}"),
+            f"{tmpdir}/ckpt",
+            query_name="tx_timeout",
+            timeout_s=0.001,
+        )
+    assert spark.streams.active == []
 
 
 _ST_DDL = (

@@ -174,18 +174,36 @@ def test_recursive_influence1_matches_window_impl(spark):
     assert n_signals > 0  # the fixture data must actually exercise signals
 
 
-def test_window_stats_rejects_non_divisible_slide(spark):
-    # the bucket-partial rollup requires window % slide == 0; a silent
-    # truncation would under-cover every window (see window_stats docstring)
-    import pytest
+def test_window_stats_non_divisible_slide_matches_brute_force(spark):
+    # a window that is not a whole number of slides (25 s / 10 s): every
+    # event belongs to each window [s, s + 25 s) whose start s is a multiple
+    # of 10 s — two or three windows per event, checked exactly against a
+    # pure-Python enumeration
+    from collections import defaultdict
 
+    from apmbackend_spark.functions.percentile import midpoint_percentile_py
     from apmbackend_spark.operators.window_stats import window_stats
     from apmbackend_spark.sources.tx import load_tx
     from tests.conftest import SF_SMOKE
 
+    window_ms, slide_ms = 25_000, 10_000
     tx = load_tx(spark, SF_SMOKE)
-    with pytest.raises(ValueError, match="multiple of slide"):
-        window_stats(tx, window="25 seconds", slide="10 seconds")
+    groups = defaultdict(list)
+    for r in tx.select("server", "service", "endts", "elapsed").collect():
+        s = r["endts"] - r["endts"] % slide_ms
+        while s + window_ms > r["endts"]:
+            groups[(r["server"], r["service"], s)].append(r["elapsed"])
+            s -= slide_ms
+    want = []
+    for (server, service, start), vals in groups.items():
+        vals.sort()
+        n = len(vals)
+        want.append((
+            server, service, start, n, n / (window_ms / 60_000), float(sum(vals)) / n,
+            midpoint_percentile_py(vals, 75), midpoint_percentile_py(vals, 95),
+        ))
+    got = window_stats(tx, window="25 seconds", slide="10 seconds").collect()
+    assert sorted(tuple(r) for r in got) == sorted(want)
 
 
 def test_zscore_chunked_matches_global_on_dense_grid(spark):
